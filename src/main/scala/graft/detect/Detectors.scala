@@ -13,6 +13,13 @@ final class CpOffsets(val s: String) {
   val identity: Boolean = cpLen == utf16Len
   def toCp(u16: Int): Int = if (identity) u16 else s.codePointCount(0, u16)
   def toU16(cp: Int): Int = if (identity) cp else s.offsetByCodePoints(0, cp)
+
+  /** Python `s[start:end]` by code points. */
+  def slice(start: Int, end: Int): String = {
+    val s2 = math.min(math.max(start, 0), cpLen)
+    val e2 = math.min(math.max(end, s2), cpLen)
+    s.substring(toU16(s2), toU16(e2))
+  }
 }
 
 /** Monotone variant of [[CpOffsets.toCp]] for left-to-right scans:
@@ -60,23 +67,30 @@ object Detectors {
   ): Array[SpanEnt] = {
     val off = new CpOffsets(text)
     val out = new scala.collection.mutable.ArrayBuffer[SpanEnt](8)
-    val hasCjk = {
-      var i = 0
-      var found = false
-      while (i < text.length && !found) {
-        val c = text.charAt(i)
-        if (c >= '一' && c <= '鿿') found = true
-        i += 1
-      }
-      found
+    // one pass: any CJK char, and the longest run of `\d` code points
+    var hasCjk = false
+    var digitRun = 0
+    var run = 0
+    var i = 0
+    while (i < text.length) {
+      val c = text.charAt(i)
+      if (c >= '一' && c <= '鿿') hasCjk = true
+      val cp = if (Character.isHighSurrogate(c)) text.codePointAt(i) else c.toInt
+      if (if (cp < 128) cp >= '0' && cp <= '9' else Character.isDigit(cp)) {
+        run += 1
+        if (run > digitRun) digitRun = run
+      } else run = 0
+      i += Character.charCount(cp)
     }
     var r = 0
     while (r < rules.length) {
       val rule = rules(r)
-      // guard: a match provably contains one of these literals; skip the
-      // backtracking matcher when none occurs (semantics unchanged)
+      // guards: a match provably contains one of these literals, and a digit
+      // run of `minDigitRun`; skip the backtracking matcher when the text
+      // lacks them (semantics unchanged)
       val runnable =
         if (rule.cjkGuards && !hasCjk) false
+        else if (rule.minDigitRun > digitRun) false
         else rule.guards.isEmpty || rule.guards.exists(text.contains)
       if (runnable) {
         val m = rule.matcher(text)

@@ -22,13 +22,22 @@ import java.util.regex.Pattern
   * position on non-matching text), zero semantic change. `cjkGuards` marks
   * rules whose guards are all CJK, so one has-CJK test per text skips them
   * wholesale on ASCII text.
+  *
+  * Rules with no literal to guard on carry `minDigitRun` instead: the length
+  * of the longest run of consecutive `\d` every match contains (derived by
+  * hand from the pattern; 0 means no bound). Under `UNICODE_CHARACTER_CLASS`
+  * `\d` is exactly `Character.isDigit` on a code point, so the scanner's one
+  * pass over the text measures its longest such run and skips a rule whose
+  * `minDigitRun` exceeds it — again pure performance: the zh ID, PASSPORT,
+  * UNIFIED_BUSINESS_NO and MEDICAL_ID rules otherwise run on every turn.
   */
 object RegexRules {
 
   final case class Rule(
       typ: String,
       pattern: Pattern,
-      guards: Seq[String] = Nil
+      guards: Seq[String] = Nil,
+      minDigitRun: Int = 0
   ) {
     val cjkGuards: Boolean =
       guards.nonEmpty && guards.forall(_.forall(c => c >= '一' && c <= '鿿'))
@@ -50,7 +59,7 @@ object RegexRules {
 
   /** `configs/regex_zh.yaml` — order preserved. */
   lazy val zh: IndexedSeq[Rule] = IndexedSeq(
-    Rule("ID", compile("[A-Z]\\d{9}", Pattern.CASE_INSENSITIVE)),
+    Rule("ID", compile("[A-Z]\\d{9}", Pattern.CASE_INSENSITIVE), minDigitRun = 9),
     Rule("PHONE", compile("09\\d{2}-?\\d{3}-?\\d{3}", Pattern.MULTILINE), Seq("09")),
     Rule("EMAIL", compile("[\\w\\.-]+@[\\w\\.-]+\\.[A-Za-z]{2,4}"), Seq("@")),
     Rule("ADDRESS", compile("(台北市|台中市|高雄市)[^,，°]{3,20}(路|街|巷)\\d+號?"),
@@ -69,9 +78,9 @@ object RegexRules {
     Rule("ADDRESS", compile("\\d{3,4}巷\\d{1,3}弄\\d{1,3}號"), Seq("巷")),
     Rule("ADDRESS", compile("[^\\n，；。]{1,30}(大樓|社區|大廈|商業大樓)[^,，；。]{0,30}"),
       Seq("大樓", "社區", "大廈")),
-    Rule("PASSPORT", compile("[A-Z]{1,2}\\d{6,8}")),
-    Rule("UNIFIED_BUSINESS_NO", compile("\\d{8}")),
-    Rule("MEDICAL_ID", compile("[A-Z]\\d{7,8}"))
+    Rule("PASSPORT", compile("[A-Z]{1,2}\\d{6,8}"), minDigitRun = 6),
+    Rule("UNIFIED_BUSINESS_NO", compile("\\d{8}"), minDigitRun = 8),
+    Rule("MEDICAL_ID", compile("[A-Z]\\d{7,8}"), minDigitRun = 7)
   )
 
   /** `configs/regex_en.yaml` — order preserved. */

@@ -22,6 +22,7 @@ object FakeProvider {
   private val TW_ADDRESSES =
     IndexedSeq("台北市信義路1號", "新北市中山路10號", "台中市民生路99號")
   private val PASSPORT_PREFIXES = IndexedSeq("P", "PA", "PB")
+  private val GENDERS = IndexedSeq("1", "2")
 
   /** `generate_deterministic` (`fake_provider.py:52-67,83-102`). */
   def generateDeterministic(
@@ -49,27 +50,32 @@ object FakeProvider {
       case "ID" | "TW_ID" =>
         if (isTw) {
           val letter = rng.choice(TW_ID_LETTERS)
-          val gender = rng.choice(IndexedSeq("1", "2"))
+          val gender = rng.choice(GENDERS)
           val mid = digits(rng, 7)
           val checksum = rng.randint(0, 9)
           s"$letter$gender$mid$checksum"
         } else {
-          f"${rng.randint(0, 999)}%03d-${rng.randint(0, 99)}%02d-${rng.randint(0, 9999)}%04d"
+          val area = zeroPad(rng.randint(0, 999), 3)
+          val group = zeroPad(rng.randint(0, 99), 2)
+          area + "-" + group + "-" + zeroPad(rng.randint(0, 9999), 4)
         }
       case "PHONE" =>
         if (isTw) "09" + digits(rng, 8)
-        else f"555-${rng.randint(100, 999)}%03d-${rng.randint(0, 9999)}%04d"
+        else {
+          val exchange = zeroPad(rng.randint(100, 999), 3)
+          "555-" + exchange + "-" + zeroPad(rng.randint(0, 9999), 4)
+        }
       case "EMAIL" =>
-        f"user${rng.randint(0, 999999)}%06d@example.com"
+        "user" + zeroPad(rng.randint(0, 999999), 6) + "@example.com"
       case "UNIFIED_BUSINESS_NO" =>
-        f"${rng.randint(0, 99999999)}%08d"
+        zeroPad(rng.randint(0, 99999999), 8)
       case "PASSPORT" =>
         val prefix = rng.choice(PASSPORT_PREFIXES)
         prefix + digits(rng, 7)
       case "MEDICAL_ID" =>
         "M" + digits(rng, 7)
       case "CONTRACT_NO" =>
-        f"CN-${rng.randint(0, 999999)}%06d"
+        "CN-" + zeroPad(rng.randint(0, 999999), 6)
       case "ORGANIZATION" =>
         s"Example Organization ${rng.randint(1, 9999)}"
       case "NAME" =>
@@ -85,6 +91,12 @@ object FakeProvider {
   /** `_placeholder` (`fake_provider.py:170-173`). */
   def placeholder(entityType: String, stableKey: String): String =
     s"<$entityType:${Digests.sha256Hex(stableKey).substring(0, 8)}>"
+
+  /** Python `f"{v:0{width}d}"` for `0 <= v`. */
+  private def zeroPad(v: Int, width: Int): String = {
+    val s = Integer.toString(v)
+    if (s.length >= width) s else "00000000".substring(0, width - s.length) + s
+  }
 
   private def digits(rng: PyRandom, n: Int): String = {
     val sb = new java.lang.StringBuilder(n)

@@ -12,11 +12,21 @@ package graft.functions
   * `random_seed`). All seeds here come from
   * `int(sha256(key).hexdigest()[:8], 16)` so they fit one word.
   *
-  * Not thread-safe; allocate one instance per (type, original, ctx) triple —
-  * the generator sequences are short (< 20 draws).
+  * Not thread-safe. Hot paths reuse one instance per thread through
+  * [[PyRandom.threadLocal]].
+  *
+  * Seeding does no twisting: `reseed` starts from the precomputed
+  * `init_genrand(19650218)` state, runs the two `init_by_array` passes, and
+  * leaves the state untwisted. Each draw then twists exactly the word it
+  * returns. This is exact because words are twisted strictly in index
+  * order, 0 to 623 and around again: when word `kk` is twisted, words below
+  * `kk` already hold this round's values and words above it the previous
+  * round's, which is the array state CPython's eager loop reads at step
+  * `kk`. A sequence of fewer than 20 draws thus twists fewer than 20 words.
   */
 final class PyRandom(seed: Long) {
-  private val N = 624
+  import PyRandom.{M, N}
+
   private val mt = new Array[Int](N)
   private var mti = N
 
@@ -27,60 +37,48 @@ final class PyRandom(seed: Long) {
     * sequence (see [[PyRandom.threadLocal]]).
     */
   def reseed(seed: Long): Unit = {
-    // init_genrand(19650218) then init_by_array([seed & 0xffffffff])
-    mt(0) = 19650218
-    var i = 1
-    while (i < N) {
-      mt(i) = 1812433253 * (mt(i - 1) ^ (mt(i - 1) >>> 30)) + i
-      i += 1
-    }
+    // init_genrand(19650218) then init_by_array([seed & 0xffffffff]); with a
+    // one-word key `init_key[j] + j` is always `key + 0`. Each loop's
+    // wrap-around (`mt[0] = mt[N-1]; i = 1`) is unrolled after it; its write
+    // to mt[0] is dead, since mt[0] is read only as the previous word, which
+    // `prev` holds, and is set to 0x80000000 at the end
+    val mt = this.mt
+    System.arraycopy(PyRandom.genrand19650218, 0, mt, 0, N)
     val key = (seed & 0xffffffffL).toInt
-    val keyLen = 1
-    i = 1
-    var j = 0
-    var k = math.max(N, keyLen)
-    while (k > 0) {
-      mt(i) = (mt(i) ^ ((mt(i - 1) ^ (mt(i - 1) >>> 30)) * 1664525)) + key + j
-      i += 1; j += 1
-      if (i >= N) { mt(0) = mt(N - 1); i = 1 }
-      if (j >= keyLen) j = 0
-      k -= 1
-    }
-    k = N - 1
-    while (k > 0) {
-      mt(i) = (mt(i) ^ ((mt(i - 1) ^ (mt(i - 1) >>> 30)) * 1566083941)) - i
+    var prev = mt(0)
+    var i = 1
+    while (i < N) { // first loop: N steps, i = 1 .. N-1 then 1
+      prev = (mt(i) ^ ((prev ^ (prev >>> 30)) * 1664525)) + key
+      mt(i) = prev
       i += 1
-      if (i >= N) { mt(0) = mt(N - 1); i = 1 }
-      k -= 1
     }
+    prev = (mt(1) ^ ((prev ^ (prev >>> 30)) * 1664525)) + key
+    mt(1) = prev
+    i = 2
+    while (i < N) { // second loop: N-1 steps, i = 2 .. N-1 then 1
+      prev = (mt(i) ^ ((prev ^ (prev >>> 30)) * 1566083941)) - i
+      mt(i) = prev
+      i += 1
+    }
+    mt(1) = (mt(1) ^ ((prev ^ (prev >>> 30)) * 1566083941)) - 1
     mt(0) = 0x80000000
     mti = N
   }
 
   private def genrand(): Int = {
-    if (mti >= N) {
-      val M = 397
-      var kk = 0
-      while (kk < N - M) {
-        val y = (mt(kk) & 0x80000000) | (mt(kk + 1) & 0x7fffffff)
-        mt(kk) = mt(kk + M) ^ (y >>> 1) ^ (if ((y & 1) != 0) 0x9908b0df else 0)
-        kk += 1
-      }
-      while (kk < N - 1) {
-        val y = (mt(kk) & 0x80000000) | (mt(kk + 1) & 0x7fffffff)
-        mt(kk) = mt(kk + (M - N)) ^ (y >>> 1) ^ (if ((y & 1) != 0) 0x9908b0df else 0)
-        kk += 1
-      }
-      val y = (mt(N - 1) & 0x80000000) | (mt(0) & 0x7fffffff)
-      mt(N - 1) = mt(M - 1) ^ (y >>> 1) ^ (if ((y & 1) != 0) 0x9908b0df else 0)
-      mti = 0
-    }
-    var y = mt(mti)
-    mti += 1
-    y ^= y >>> 11
-    y ^= (y << 7) & 0x9d2c5680
-    y ^= (y << 15) & 0xefc60000
-    y ^ (y >>> 18)
+    if (mti >= N) mti = 0
+    val kk = mti
+    // the eager twist's step kk (genrand_uint32 in Modules/_randommodule.c)
+    val next = if (kk == N - 1) mt(0) else mt(kk + 1)
+    val y = (mt(kk) & 0x80000000) | (next & 0x7fffffff)
+    val far = if (kk < N - M) mt(kk + M) else mt(kk + M - N)
+    var w = far ^ (y >>> 1) ^ (if ((y & 1) != 0) 0x9908b0df else 0)
+    mt(kk) = w
+    mti = kk + 1
+    w ^= w >>> 11
+    w ^= (w << 7) & 0x9d2c5680
+    w ^= (w << 15) & 0xefc60000
+    w ^ (w >>> 18)
   }
 
   /** Python `getrandbits(k)` for 1 <= k <= 32: top k bits of one draw. */
@@ -151,6 +149,21 @@ final class PyRandom(seed: Long) {
 }
 
 object PyRandom {
+  private val N = 624
+  private val M = 397
+
+  /** `init_genrand(19650218)`: the state every `init_by_array` starts from. */
+  private val genrand19650218: Array[Int] = {
+    val a = new Array[Int](N)
+    a(0) = 19650218
+    var i = 1
+    while (i < N) {
+      a(i) = 1812433253 * (a(i - 1) ^ (a(i - 1) >>> 30)) + i
+      i += 1
+    }
+    a
+  }
+
   private val tl: ThreadLocal[PyRandom] =
     ThreadLocal.withInitial(() => new PyRandom(0L))
 

@@ -1,7 +1,6 @@
 package graft.pipeline
 
-import graft.detect.{Detectors, RegexRules, Resolver}
-import graft.functions.Digests
+import graft.detect.{CpOffsets, Detectors, Resolver}
 import graft.model.{DeidEvent, Entity, SpanEnt}
 import graft.redact.Redactor
 
@@ -44,12 +43,12 @@ object DeidCore {
       contextHash: Option[String] = None
   ): Result = {
     val resolved = detect(text, lang, withStub)
-    val ctx = contextHash.getOrElse(Digests.sha256Hex(text))
     val (clean, rawEvents) = Redactor.normalizeMode(mode) match {
       case "blackbox" => Redactor.blackboxMode(text, resolved)
-      case _          => Redactor.replaceMode(text, resolved, Some(ctx), isTw = true)
+      case _          => Redactor.replaceMode(text, resolved, contextHash, isTw = true)
     }
     val (events, map) = Redactor.filterEvents(rawEvents)
+    val off = new CpOffsets(text)
     val entities = resolved.iterator.map { e =>
       Entity(
         typ = e.typ,
@@ -59,7 +58,7 @@ object DeidCore {
         language = lang,
         start = e.start,
         end = e.end,
-        text = Redactor.cpSlice(text, e.start, e.end)
+        text = off.slice(e.start, e.end)
       )
     }.toList
     Result(clean, entities, events, map)

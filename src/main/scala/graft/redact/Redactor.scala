@@ -28,7 +28,8 @@ object Redactor {
   )
 
   /** `_replace_mode` (`replacer.py:41-81`). `contextHash` defaults to
-    * sha256 of the text (`replacer.py:46-48`).
+    * sha256 of the text (`replacer.py:46-48`), computed only when there is
+    * an entity to replace.
     */
   def replaceMode(
       text: String,
@@ -36,6 +37,7 @@ object Redactor {
       contextHash: Option[String] = None,
       isTw: Boolean = true
   ): (String, List[RawEvent]) = {
+    if (entities.isEmpty) return (text, Nil)
     val ctx = contextHash.getOrElse(Digests.sha256Hex(text))
     val sortedDesc = entities.sortBy(e => -e.start) // stable on equal starts
     val off = new CpOffsets(text)
@@ -49,7 +51,7 @@ object Redactor {
     var i = 0
     while (i < n) {
       val ent = sortedDesc(i)
-      val original = cpSliceWith(text, off, ent.start, ent.end)
+      val original = off.slice(ent.start, ent.end)
       originals(i) = original
       val key = s"${ent.typ}:$original"
       var repl = memo.get(key)
@@ -158,13 +160,6 @@ object Redactor {
     cur
   }
 
-  private def cpSliceWith(s: String, off: CpOffsets, start: Int, end: Int): String = {
-    val cpLen = off.cpLen
-    val s2 = math.min(math.max(start, 0), cpLen)
-    val e2 = math.min(math.max(end, s2), cpLen)
-    s.substring(off.toU16(s2), off.toU16(e2))
-  }
-
   /** `"replacement"/"replace" → replace`, `"blackbox/black/redact/mask" →
     * blackbox`, default replace (`__init__.py:150-157`, `replacer.py:36-39`).
     */
@@ -193,13 +188,8 @@ object Redactor {
   }
 
   /** Python `text[s:e]` by code points. */
-  def cpSlice(s: String, start: Int, end: Int): String = {
-    val off = new CpOffsets(s)
-    val cpLen = off.cpLen
-    val s2 = math.min(math.max(start, 0), cpLen)
-    val e2 = math.min(math.max(end, s2), cpLen)
-    s.substring(off.toU16(s2), off.toU16(e2))
-  }
+  def cpSlice(s: String, start: Int, end: Int): String =
+    new CpOffsets(s).slice(start, end)
 
   /** Python `text[:s] + r + text[e:]` by code points. */
   def splice(s: String, start: Int, end: Int, replacement: String): String = {

@@ -1,6 +1,6 @@
 package graft
 
-import graft.detect.Resolver
+import graft.detect.{CpOffsets, Detectors, RegexRules, Resolver}
 import graft.model.SpanEnt
 import graft.pipeline.DeidCore
 import graft.redact.Redactor
@@ -13,7 +13,8 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - detected spans are in bounds and slice-consistent;
   *  - replacement is deterministic;
   *  - the single-pass splice fast path ≡ the exact Python-emulation path
-  *    on arbitrary (incl. overlapping) span sets.
+  *    on arbitrary (incl. overlapping) span sets;
+  *  - the guarded regex scan ≡ running every rule's pattern.
   */
 class PropertySpec extends AnyFunSuite {
 
@@ -106,6 +107,47 @@ class PropertySpec extends AnyFunSuite {
         slowRepl = Redactor.splice(slowRepl, e.start, e.end, r)
       }
       fastBlack == slowBlack && fastRepl == slowRepl
+    })
+  }
+
+  // `\d` under UNICODE_CHARACTER_CLASS: ASCII, Arabic-Indic, Devanagari and a
+  // supplementary Nd digit (U+1D7CE MATHEMATICAL BOLD DIGIT ZERO)
+  private val digitGen: Gen[String] = Gen.oneOf(
+    Gen.numChar.map(_.toString),
+    Gen.choose('\u0660', '\u0669').map(_.toString),
+    Gen.choose('\u0966', '\u096f').map(_.toString),
+    Gen.const(new String(Character.toChars(0x1d7ce))))
+  private val runLengths: Seq[Int] =
+    (RegexRules.zh ++ RegexRules.en).map(_.minDigitRun).filter(_ > 0)
+      .flatMap(n => Seq(n - 1, n)).distinct
+  private val digitRunGen: Gen[String] = for {
+    n <- Gen.oneOf(runLengths)
+    ds <- Gen.listOfN(n, digitGen)
+  } yield ds.mkString
+  private val scanTextGen: Gen[String] = for {
+    n <- Gen.choose(0, 10)
+    parts <- Gen.listOfN(n, Gen.frequency(
+      4 -> digitRunGen,
+      2 -> digitGen,
+      3 -> Gen.alphaChar.map(_.toString),
+      1 -> Gen.oneOf("ſ", "\u212a", "@", "-", " ", ".", "台北市", "信義路", "路",
+        "巷", "弄", "號", "樓", "鄰", "大樓", "09", "St")))
+  } yield parts.mkString
+
+  test("guarded regex scan == running every rule's pattern unconditionally") {
+    def unguarded(text: String, rules: IndexedSeq[RegexRules.Rule]): Seq[SpanEnt] = {
+      val off = new CpOffsets(text)
+      rules.flatMap { rule =>
+        val m = rule.pattern.matcher(text)
+        Iterator.continually(m).takeWhile(_.find())
+          .map(m => SpanEnt(off.toCp(m.start), off.toCp(m.end), rule.typ, 1.0, "regex"))
+          .toList
+      }
+    }
+    check(Prop.forAll(scanTextGen) { text =>
+      Seq("zh", "en").forall { lang =>
+        Detectors.regexDetect(text, lang).toSeq == unguarded(text, RegexRules.forLang(lang))
+      }
     })
   }
 }

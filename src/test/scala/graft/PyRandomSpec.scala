@@ -12,7 +12,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * random.Random(1).randint(0,9) x10 -> 2,9,1,4,1,7,7,7,6,3
   * random.Random(7).choice('ABCDEFGHJKLMNPQRSTUVXYWZ') -> 'L'
   * random.Random(999): randint(100,999)=900, randint(0,9999)=1311
+  * r = random.Random(12345); d = [r.getrandbits(32) for _ in range(1251)]
+  * d[623:627]   -> 2049964430, 4171722749, 3649179348, 3014839245
+  * d[1247:1251] -> 161923315, 614870966, 1603027971, 2512721587
   * }}}
+  * Draws 623-626 and 1247-1250 straddle the first and second 624-word
+  * twists, which the generator performs one word at a time.
   */
 class PyRandomSpec extends AnyFunSuite {
 
@@ -29,6 +34,25 @@ class PyRandomSpec extends AnyFunSuite {
     val rf = new PyRandom(0xffffffffL)
     assert(Seq.fill(3)(rf.getrandbits(32)) ==
       Seq(2728839433L, 2661025012L, 872737089L))
+  }
+
+  test("getrandbits(32) matches CPython across the first and second twists") {
+    val r = new PyRandom(12345L)
+    val d = Seq.fill(1251)(r.getrandbits(32))
+    assert(d.slice(623, 627) ==
+      Seq(2049964430L, 4171722749L, 3649179348L, 3014839245L))
+    assert(d.slice(1247, 1251) ==
+      Seq(161923315L, 614870966L, 1603027971L, 2512721587L))
+  }
+
+  test("threadLocal reseeded mid-sequence equals a fresh instance") {
+    val used = PyRandom.threadLocal(42L)
+    (1 to 700).foreach(_ => used.getrandbits(32))
+    val reused = PyRandom.threadLocal(12345L)
+    assert(reused eq used)
+    val got = Seq.fill(30)(reused.getrandbits(32))
+    val fresh = new PyRandom(12345L)
+    assert(got == Seq.fill(30)(fresh.getrandbits(32)))
   }
 
   test("randint matches CPython") {
