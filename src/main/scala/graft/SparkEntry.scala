@@ -525,8 +525,8 @@ object SparkEntry {
         .orderBy("doc_id")
     }),
 
-    // near-dup pairs -> CLUSTER ASSIGNMENT (connected components, min-label
-    // propagation): the keep/drop decision of a dedup pipeline. Exact-pair
+    // near-dup pairs -> CLUSTER ASSIGNMENT (connected components, driver
+    // union-find below 2^20 edges): the keep/drop decision of a dedup pipeline. Exact-pair
     // edges so the DuckDB recursive-CTE oracle reproduces the whole graph.
     "dedup_clusters" -> ((s, dir) => {
       val (pairs, nodes) = clusterPairGraph(s, dir)
@@ -1831,22 +1831,21 @@ object SparkEntry {
         .withColumn("is_boilerplate", col("n_copies") > 100)
         .orderBy("conv_id", "turn_idx")),
 
-    // exact quantiles WITHOUT the exact-path row bound: counting bisection
-    // over the integer value domain — O(log range) cheap counting passes,
-    // no sort, no per-group heap (the summarizeNumbers guard's declared
-    // gap), all four ranks bisecting simultaneously. Lower nearest-rank
+    // exact quantiles WITHOUT the exact-path row bound (the summarizeNumbers
+    // guard's declared gap): Rank.select — one in-buffer aggregation up to
+    // 2^20 rows, counting bisection above, all four ranks in the same
+    // passes. Lower nearest-rank
     // k = floor(q·(n−1))+1, the reference's p95 convention — answers are
     // data values, so the row_number oracle replays them exactly
     "quantiles_bisect" -> ((s, dir) =>
-      Metrics.exactQuantilesBisect(docs(s, dir), "n_chars",
+      Metrics.exactQuantiles(docs(s, dir), "n_chars",
         Seq(0.5, 0.9, 0.95, 0.99))),
 
-    // grouped variant: exact per-source p50/p95 with NO per-group heap —
-    // per-group bisection intervals on the driver (bounded by the group
-    // count, a reporting dimension), one broadcast-join + conditional-
-    // count groupBy per pass
+    // grouped variant: exact per-source p50/p95 — only sources above 2^20
+    // rows bisect, with per-group intervals on the driver (bounded by the
+    // group count, a reporting dimension)
     "quantiles_by_source" -> ((s, dir) =>
-      Metrics.groupedQuantilesBisect(docs(s, dir), "source", "n_chars",
+      Metrics.groupedQuantiles(docs(s, dir), "source", "n_chars",
           Seq(0.5, 0.95))
         .orderBy("source")),
 

@@ -70,250 +70,63 @@ object Metrics {
 
   /** EXACT quantiles at UNBOUNDED scale — the third leg beside
     * [[summarizeNumbers]] (exact, per-group heap, fail-loud row bound) and
-    * [[summarizeNumbersApprox]] (sketch, not exact): counting bisection
-    * over an integer value domain. Each rank is the smallest v with
-    * `count(x <= v) >= k`, found by binary search — O(log(max−min))
-    * passes, each ONE partial-aggregated count over the (persisted)
-    * column, O(#quantiles) driver state, no sort, no heap: exact p99 of a
-    * 10¹²-row column in ≤ 64 cheap scans. All requested quantiles bisect
-    * SIMULTANEOUSLY (one conditional-sum aggregate carries every
-    * unconverged midpoint per pass), so the pass count does not grow with
-    * the quantile count.
+    * [[summarizeNumbersApprox]] (sketch, not exact): [[Rank.select]] over
+    * an integer column, so a column of at most 2^20 rows is one in-buffer
+    * aggregation and a larger one a counting bisection — O(log range)
+    * partial-aggregated count passes, no sort, no heap, all requested
+    * ranks bisecting in the same passes.
     *
     * Rank convention: lower nearest-rank `k = floor(q·(n−1)) + 1` — the
     * reference's p95 formula (`training/quality.py:10-23`), so answers are
     * actual data values and a DuckDB `row_number()` oracle replays them
     * exactly. Empty input → one row with n=0 and null quantiles.
     */
-  def exactQuantilesBisect(
+  def exactQuantiles(
       df: DataFrame,
       valueCol: String,
       qs: Seq[Double] = Seq(0.5, 0.9, 0.95, 0.99)
   ): DataFrame = {
-    require(qs.nonEmpty && qs.forall(q => q >= 0.0 && q <= 1.0),
-      s"quantiles must be in [0,1], got $qs")
-    val spark = df.sparkSession
-    // name from integer per-mille (q·100 in double is not exact: 0.95·100
-    // = 94.999…): p50, p95, p99, p99_9
-    def colName(q: Double) = {
-      val pm = math.round(q * 1000)
-      if (pm % 10 == 0) s"p${pm / 10}" else s"p${pm / 10}_${pm % 10}"
-    }
-    val schema = org.apache.spark.sql.types.StructType(
-      org.apache.spark.sql.types.StructField("n",
-        org.apache.spark.sql.types.LongType, nullable = false) +:
-        qs.map(q => org.apache.spark.sql.types.StructField(colName(q),
-          org.apache.spark.sql.types.LongType, nullable = true)))
-    val base = df.select(col(valueCol).cast("long").as("v"))
-      .where(col("v").isNotNull)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val head = base.agg(count(lit(1)), min(col("v")), max(col("v"))).collect()(0)
-      val n = head.getLong(0)
-      if (n == 0L)
-        return spark.createDataFrame(
-          spark.sparkContext.parallelize(
-            Seq(org.apache.spark.sql.Row.fromSeq(0L +: qs.map(_ => null))), 1),
-          schema)
-      val ks = qs.map(q => math.floor(q * (n - 1)).toLong + 1L)
-      // invariant per rank: answer ∈ [lo, hi]; converged when lo == hi
-      val lo = Array.fill(qs.size)(head.getLong(1))
-      val hi = Array.fill(qs.size)(head.getLong(2))
-      var passes = 0
-      while (lo.indices.exists(i => lo(i) < hi(i))) {
-        passes += 1
-        require(passes <= 70, s"bisection failed to converge in $passes passes")
-        val open = lo.indices.filter(i => lo(i) < hi(i))
-        // midpoint that can't overflow and always moves: lo + (hi-lo)/2
-        val mids = open.map(i => lo(i) + (hi(i) - lo(i)) / 2)
-        val counts = base.agg(
-            sum(when(col("v") <= mids.head, 1L).otherwise(0L)),
-            open.tail.zipWithIndex.map { case (_, j) =>
-              sum(when(col("v") <= mids(j + 1), 1L).otherwise(0L))
-            }: _*)
-          .collect()(0)
-        open.zipWithIndex.foreach { case (i, j) =>
-          if (counts.getLong(j) >= ks(i)) hi(i) = mids(j)
-          else lo(i) = mids(j) + 1
-        }
-      }
-      spark.createDataFrame(
-        spark.sparkContext.parallelize(
-          Seq(org.apache.spark.sql.Row.fromSeq(n +: lo.toSeq)), 1),
-        schema)
-    } finally base.unpersist()
+    val ranks = Rank.select(df.withColumn("rank_all", lit(0)), "rank_all",
+      Seq(col(valueCol)), nearestRanks(qs))
+    // a global aggregate over the at most one group row: exactly one row
+    ranks.agg(coalesce(max("n"), lit(0L)).as("n"), quantileCols(qs).map(c => max(c)): _*)
+      .toDF("n" +: qs.map(quantileName): _*)
   }
 
-  /** Grouped [[exactQuantilesBisect]]: exact per-group order statistics
-    * with UNBOUNDED group sizes — the shape [[summarizeNumbers]]'s
-    * fail-loud guard refuses (a billion-row group would sit on one task's
-    * heap there; here it is never materialized at all). Driver state is
-    * one (lo, hi) interval per (group, quantile) — the bounded-collect
-    * contract of the IVF centroid path: #groups must be a reporting
-    * dimension (sources, languages), enforced by `maxGroups`. Each pass
-    * broadcast-joins the per-group midpoints and runs ONE partial-
-    * aggregated conditional-count `groupBy` — groups converge
-    * independently, total passes = log(max value range over groups).
+  /** Grouped [[exactQuantiles]]: exact per-group order statistics with
+    * UNBOUNDED group sizes — the shape [[summarizeNumbers]]'s fail-loud
+    * guard refuses. Only groups above 2^20 rows bisect; the rest are one
+    * in-buffer aggregation. Driver state is bounded by `maxGroups`: the
+    * group must be a reporting dimension (sources, languages).
     *
-    * Output: one row per group — n plus a value column per quantile
-    * (lower nearest-rank, as [[exactQuantilesBisect]]).
+    * Output: one row per group — the group, n, and a value column per
+    * quantile (lower nearest-rank, as [[exactQuantiles]]).
     */
-  def groupedQuantilesBisect(
+  def groupedQuantiles(
       df: DataFrame,
       groupCol: String,
       valueCol: String,
       qs: Seq[Double] = Seq(0.5, 0.95),
       maxGroups: Int = 100000
-  ): DataFrame = {
+  ): DataFrame =
+    Rank.select(df, groupCol, Seq(col(valueCol)), nearestRanks(qs), maxGroups)
+      .select(col(groupCol) +: col("n") +: quantileCols(qs): _*)
+      .toDF(groupCol +: "n" +: qs.map(quantileName): _*)
+
+  private def nearestRanks(qs: Seq[Double]): Long => Seq[Long] = {
     require(qs.nonEmpty && qs.forall(q => q >= 0.0 && q <= 1.0),
       s"quantiles must be in [0,1], got $qs")
-    val spark = df.sparkSession
-    def colName(q: Double) = {
-      val pm = math.round(q * 1000)
-      if (pm % 10 == 0) s"p${pm / 10}" else s"p${pm / 10}_${pm % 10}"
-    }
-    val base = df.select(col(groupCol).cast("string").as("g"),
-        col(valueCol).cast("long").as("v"))
-      .where(col("v").isNotNull && col("g").isNotNull)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val heads = base.groupBy("g")
-        .agg(count(lit(1)).as("n"), min("v").as("lo"), max("v").as("hi"))
-        .limit(maxGroups + 1).collect()
-      require(heads.length <= maxGroups,
-        s"more than $maxGroups groups - grouped bisection state is " +
-          "driver-side; use a reporting dimension or raise maxGroups")
-      // per (group, quantile): rank k and the bisection interval
-      case class St(g: String, n: Long, k: Long, var lo: Long, var hi: Long)
-      val states = heads.flatMap { r =>
-        val (g, n) = (r.getString(0), r.getLong(1))
-        qs.map(q => St(g, n, math.floor(q * (n - 1)).toLong + 1L,
-          r.getLong(2), r.getLong(3)))
-      }
-      var passes = 0
-      while (states.exists(s => s.lo < s.hi)) {
-        passes += 1
-        require(passes <= 70, s"bisection failed to converge in $passes passes")
-        // one row per group carrying every open midpoint for that group
-        // (array aligned with qs); converged slots carry null
-        val midRows = states.groupBy(_.g).toSeq.map { case (g, sts) =>
-          val byK = sts // in qs order per construction
-          org.apache.spark.sql.Row(g, byK.map(s =>
-            if (s.lo < s.hi) java.lang.Long.valueOf(s.lo + (s.hi - s.lo) / 2)
-            else null).toSeq)
-        }
-        val midSchema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("g",
-            org.apache.spark.sql.types.StringType, nullable = false),
-          org.apache.spark.sql.types.StructField("mids",
-            org.apache.spark.sql.types.ArrayType(
-              org.apache.spark.sql.types.LongType, containsNull = true),
-            nullable = false)))
-        val mids = broadcast(spark.createDataFrame(
-          spark.sparkContext.parallelize(midRows, 1), midSchema))
-        val condCounts = qs.indices.map(i => sum(when(
-          element_at(col("mids"), i + 1).isNotNull &&
-            col("v") <= element_at(col("mids"), i + 1), 1L)
-          .otherwise(0L)).as(s"c$i"))
-        val counts = base.join(mids, "g")
-          .groupBy("g").agg(condCounts.head, condCounts.tail: _*)
-          .collect().map(r => r.getString(0) ->
-            qs.indices.map(i => r.getLong(i + 1))).toMap
-        states.groupBy(_.g).foreach { case (g, sts) =>
-          val cs = counts(g)
-          sts.zipWithIndex.foreach { case (s, i) =>
-            if (s.lo < s.hi) {
-              val mid = s.lo + (s.hi - s.lo) / 2
-              if (cs(i) >= s.k) s.hi = mid else s.lo = mid + 1
-            }
-          }
-        }
-      }
-      val schema = org.apache.spark.sql.types.StructType(
-        org.apache.spark.sql.types.StructField(groupCol,
-          org.apache.spark.sql.types.StringType, nullable = false) +:
-          org.apache.spark.sql.types.StructField("n",
-            org.apache.spark.sql.types.LongType, nullable = false) +:
-          qs.map(q => org.apache.spark.sql.types.StructField(colName(q),
-            org.apache.spark.sql.types.LongType, nullable = false)))
-      val rows = states.groupBy(_.g).toSeq.map { case (g, sts) =>
-        org.apache.spark.sql.Row.fromSeq(g +: sts.head.n +: sts.map(_.lo).toSeq)
-      }
-      spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
-    } finally base.unpersist()
+    n => qs.map(q => math.floor(q * (n - 1)).toLong + 1L)
   }
 
-  /** Exact per-group k-th smallest of an integer column — the RANK twin of
-    * [[groupedQuantilesBisect]] (same counting-bisection machinery, same
-    * driver-bounded contract), with the rank chosen PER GROUP:
-    * `kOf(group, n)` clamped into [1, n]. Returns (groupCol, n, kth) where
-    * `kth` is the k-th smallest value (a data value). No per-group sort or
-    * heap anywhere: one broadcast-join + conditional-count pass per
-    * bisection round, O(log(max−min)) rounds, groups converge
-    * independently — the exact path for per-group top-k/threshold
-    * selection (e.g. [[graft.ops.UrlOps.domainCapExact]]) at corpus scale.
-    */
-  def groupedKthSmallest(
-      df: DataFrame,
-      groupCol: String,
-      valueCol: String,
-      kOf: (String, Long) => Long,
-      maxGroups: Int = 100000
-  ): DataFrame = {
-    val spark = df.sparkSession
-    val base = df.select(col(groupCol).cast("string").as("g"),
-        col(valueCol).cast("long").as("v"))
-      .where(col("v").isNotNull && col("g").isNotNull)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val heads = base.groupBy("g")
-        .agg(count(lit(1)).as("n"), min("v").as("lo"), max("v").as("hi"))
-        .limit(maxGroups + 1).collect()
-      require(heads.length <= maxGroups,
-        s"more than $maxGroups groups - grouped bisection state is " +
-          "driver-side; use a reporting dimension or raise maxGroups")
-      case class St(g: String, n: Long, k: Long, var lo: Long, var hi: Long)
-      val states = heads.map { r =>
-        val (g, n) = (r.getString(0), r.getLong(1))
-        St(g, n, math.max(1L, math.min(kOf(g, n), n)), r.getLong(2), r.getLong(3))
-      }
-      var passes = 0
-      while (states.exists(s => s.lo < s.hi)) {
-        passes += 1
-        require(passes <= 70, s"bisection failed to converge in $passes passes")
-        val midRows = states.toSeq.map(s => org.apache.spark.sql.Row(s.g,
-          if (s.lo < s.hi) java.lang.Long.valueOf(s.lo + (s.hi - s.lo) / 2)
-          else null))
-        val midSchema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("g",
-            org.apache.spark.sql.types.StringType, nullable = false),
-          org.apache.spark.sql.types.StructField("mid",
-            org.apache.spark.sql.types.LongType, nullable = true)))
-        val mids = broadcast(spark.createDataFrame(
-          spark.sparkContext.parallelize(midRows, 1), midSchema))
-        val counts = base.join(mids, "g")
-          .groupBy("g").agg(sum(when(
-            col("mid").isNotNull && col("v") <= col("mid"), 1L)
-            .otherwise(0L)).as("c"))
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-        states.foreach { s =>
-          if (s.lo < s.hi) {
-            val mid = s.lo + (s.hi - s.lo) / 2
-            if (counts(s.g) >= s.k) s.hi = mid else s.lo = mid + 1
-          }
-        }
-      }
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField(groupCol,
-          org.apache.spark.sql.types.StringType, nullable = false),
-        org.apache.spark.sql.types.StructField("n",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("kth",
-          org.apache.spark.sql.types.LongType, nullable = false)))
-      val rows = states.toSeq.map(s =>
-        org.apache.spark.sql.Row(s.g, s.n, s.lo))
-      spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
-    } finally base.unpersist()
+  private def quantileCols(qs: Seq[Double]): Seq[Column] =
+    qs.indices.map(i => element_at(col("ranks"), i + 1).getField("k0"))
+
+  // from integer per-mille (q·100 in double is not exact: 0.95·100 =
+  // 94.999…): p50, p95, p99, p99_9
+  private def quantileName(q: Double): String = {
+    val pm = math.round(q * 1000)
+    if (pm % 10 == 0) s"p${pm / 10}" else s"p${pm / 10}_${pm % 10}"
   }
 
   /** G5 — `TYPE_PATTERNS` (`training/deid_eval.py:99-112`), as Spark regex

@@ -465,25 +465,10 @@ object Dedup {
     * near-dup evidence into the keep/drop decision a dedup pipeline
     * actually executes at corpus scale.
     *
-    * Algorithm: min-label propagation to fixpoint — each round every node
-    * takes the min label among itself and its neighbors (2 edge joins +
-    * 1 groupBy per round, all shuffles on the id key). Rounds needed =
-    * graph diameter; near-dup clusters are shallow (template families,
-    * mirror chains), so convergence is 2–4 rounds in practice. The loop
-    * exits early on convergence — note convergence is OBSERVED one round
-    * after propagation completes (a zero-change confirming round), so
-    * `maxIter` must be ≥ graph diameter + 1. If the cap is reached while
-    * labels are still changing the labels would NOT be a valid component
-    * assignment, so the call FAILS with an IllegalStateException telling
-    * the caller to raise `maxIter` or switch to the promotion path,
-    * [[connectedComponentsAlternating]] (large-star/small-star, Kiveris et
-    * al. SoCC 2014), which contracts chains in O(log n) rounds with the
-    * same join shapes.
-    *
-    * One Spark action per round: the new labels carry their previous value
-    * (`prev`) through a lazily-marked `localCheckpoint`, and the
-    * changed-count over (label ≠ prev) is the action that materializes it
-    * — no separate convergence job re-joining old against new labels.
+    * A graph of at most `smallGraphMax` edges with Long ids is union-found
+    * on the driver in one collect; any other graph (including non-Long id
+    * types) takes [[connectedComponentsAlternating]], which converges in
+    * O(log n) rounds on any diameter. Both emit the same labeling.
     *
     * `edges` = (a, b) pairs (any near-dup query's output); `nodes` = the
     * full id set (isolated docs keep their own id as cluster).
@@ -492,27 +477,23 @@ object Dedup {
       edges: DataFrame,
       nodes: DataFrame,
       idCol: String = "doc_id",
-      maxIter: Int = 10,
       smallGraphMax: Long = 1L << 20
   ): DataFrame = {
-    import org.apache.spark.sql.functions.{col, least, min}
-    // r8 small-graph fast path (the domainCapExact smallGroupMax /
-    // IVF-centroid bounded-collect contract): a pair graph under
-    // `smallGraphMax` edges (16 MB of id pairs at the default bound)
-    // union-finds on the driver in one pass — one collect + one broadcast
-    // join replaces diameter+1 iterative join rounds (each a full
-    // AQE-staged job). Larger graphs take the distributed min-label loop
-    // below unchanged; both paths emit the identical min-reachable-id
-    // labeling. Long ids only (the union-by-min order must equal Spark's
-    // min semantics; non-integral id types fall through to the loop),
+    import org.apache.spark.sql.functions.col
+    // small-graph fast path (the IVF-centroid bounded-collect contract): a
+    // pair graph under `smallGraphMax` edges (16 MB of id pairs at the
+    // default bound) union-finds on the driver — one collect + one
+    // broadcast join instead of O(log n) iterative join rounds. Long ids
+    // only (the union-by-min order must equal Spark's min semantics),
     // probed with `limit(n+1)` so an over-bound edge set is never fully
     // collected.
     val longIds = Seq(edges.schema("a").dataType, edges.schema("b").dataType,
       nodes.schema(idCol).dataType)
       .forall(_ == org.apache.spark.sql.types.LongType)
     val edgeProbe =
-      if (longIds) edges.limit((smallGraphMax + 1).toInt).select("a", "b")
-        .collectAsList()
+      if (longIds) graft.obs.JobLabel(edges.sparkSession,
+        "connectedComponents: union-find collect")(
+        edges.limit((smallGraphMax + 1).toInt).select("a", "b").collectAsList())
       else java.util.Collections.emptyList[org.apache.spark.sql.Row]()
     if (longIds && edgeProbe.size() <= smallGraphMax) {
       val parent = scala.collection.mutable.HashMap.empty[Long, Long]
@@ -539,54 +520,18 @@ object Dedup {
           org.apache.spark.sql.types.LongType, nullable = false)))
       val labelDf = spark.createDataFrame(
         spark.sparkContext.parallelize(labelRows, 1), schema)
-      return nodes
+      nodes
         .join(org.apache.spark.sql.functions.broadcast(labelDf),
           col(idCol) === col("id"), "left")
         .select(col(idCol),
           org.apache.spark.sql.functions.coalesce(col("lbl"), col(idCol))
             .as("component"))
-    }
-    val sym = edges.select(col("a").as("src"), col("b").as("dst"))
-      .union(edges.select(col("b").as("src"), col("a").as("dst")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // localCheckpoint per round: iterative plans otherwise nest one join
-    // tree per iteration (persist caches data but NOT the logical plan),
-    // which blows up planning/plan-printing at depth — lineage truncation
-    // is the standard move for iterative DataFrame algorithms. eager=false:
-    // the changed-count below is the action that materializes each round,
-    // so every round runs exactly one job.
-    var labels = nodes.select(col(idCol).as("id"), col(idCol).as("label"))
-      .localCheckpoint(false)
-    var iter = 0
-    var converged = false
-    while (iter < maxIter && !converged) {
-      val neighborMin = sym.join(labels, sym("dst") === labels("id"))
-        .select(col("src").as("id"), col("label"))
-        .groupBy("id").agg(min("label").as("nmin"))
-      val next = labels.join(neighborMin, Seq("id"), "left_outer")
-        .select(col("id"),
-          least(col("label"), org.apache.spark.sql.functions
-            .coalesce(col("nmin"), col("label"))).as("label"),
-          col("label").as("prev"))
-        .localCheckpoint(false)
-      val changed = next.where(col("label") =!= col("prev")).count()
-      labels = next.select("id", "label")
-      converged = changed == 0
-      iter += 1
-    }
-    sym.unpersist()
-    if (!converged) throw new IllegalStateException(
-      s"connectedComponents did not converge within maxIter=$maxIter rounds; " +
-        "labels would be truncated mid-propagation. Raise maxIter (rounds " +
-        "needed = graph diameter + 1 confirming zero-change round) or use " +
-        "connectedComponentsAlternating (O(log n) rounds) for chain-shaped graphs.")
-    labels.withColumnRenamed("id", idCol).withColumnRenamed("label", "component")
+    } else connectedComponentsAlternating(edges, nodes, idCol)
   }
 
   /** Connected components via large-star/small-star alternation (Kiveris
     * et al., "Connected Components in MapReduce and Beyond", SoCC 2014) —
-    * the promotion path [[connectedComponents]]'s contract points at for
-    * graphs whose diameter exceeds a sane round budget: chains contract in
+    * the distributed path of [[connectedComponents]]: chains contract in
     * O(log n) rounds instead of one round per hop.
     *
     * Each round is two edge rewrites, all shuffles keyed on node id:
@@ -597,12 +542,13 @@ object Dedup {
     * The fixpoint is a star forest — every non-root node carries one edge
     * (node, component-min). Convergence is checked with a (count,
     * hash-sum) signature computed in the same action that materializes the
-    * round's lazily-checkpointed edge set — one action per round, like
-    * [[connectedComponents]] — and then CONFIRMED with one exact multiset
-    * comparison at the (rare) signature match, so a hash-sum collision
-    * between different edge sets cannot silently terminate early. As with
-    * min-label, the fixpoint is observed one unchanged round after it is
-    * reached, so `maxIter` must cover the contraction rounds + 1.
+    * round's lazily-checkpointed edge set — one action per round — and
+    * then CONFIRMED with one exact multiset comparison at the (rare)
+    * signature match, so a hash-sum collision between different edge sets
+    * cannot silently terminate early. The fixpoint is observed one
+    * unchanged round after it is reached, so `maxIter` must cover the
+    * contraction rounds + 1; otherwise the call fails with an
+    * IllegalStateException rather than return a truncated labeling.
     */
   def connectedComponentsAlternating(
       edges: DataFrame,
@@ -643,10 +589,12 @@ object Dedup {
       val r = df.selectExpr("count(*) AS n", "coalesce(sum(hash(u, v)), 0) AS h").first()
       (r.getLong(0), r.getLong(1))
     }
-    var sig = signature(e) // materializes the initial checkpoint
+    def round[T](i: Int)(body: => T): T = graft.obs.JobLabel(edges.sparkSession,
+      s"connectedComponentsAlternating: round $i")(body)
+    var sig = round(0)(signature(e)) // materializes the initial checkpoint
     var iter = 0
     var converged = false
-    while (iter < maxIter && !converged) {
+    while (iter < maxIter && !converged) round(iter + 1) {
       val next = smallStar(largeStar(e)).localCheckpoint(false)
       val nextSig = signature(next) // the one action of this round
       // signature equality is necessary, not sufficient (hash-sum could

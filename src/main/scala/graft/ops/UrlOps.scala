@@ -162,7 +162,7 @@ object UrlOps {
     * iff its deterministic slot in `[0, n_domain)` falls below `cap` — an
     * EXPECTED cap per domain (the web-scale contract: an exact per-domain
     * top-`cap` needs a per-group order statistic — that exact path is
-    * [[graft.metrics.Metrics.groupedQuantilesBisect]] over the slot column;
+    * [[domainCapExact]];
     * the hash threshold is what production crawls run because it is
     * map-only after one count). Decision is a pure function of (id,
     * n_domain): retries and re-runs agree, and adding docs to a domain
@@ -196,12 +196,13 @@ object UrlOps {
     * the deterministic order (v, id) with
     * `v = ((id mod 1048573)·2654435761) mod 2^32` (hash-random selection;
     * the id tie-break makes the order total, so v collisions are
-    * harmless). No window anywhere: the
-    * per-domain threshold is [[graft.metrics.Metrics.groupedKthSmallest]]
-    * (counting bisection, driver state = one interval per domain under the
-    * `maxDomains` bounded-collect guard), ties at the threshold resolved by
-    * a second bisection over the tie-set ids — O(log range) cheap counting
-    * passes total, a billion-page domain never sorts in one task.
+    * harmless). No window anywhere: the per-domain threshold is the
+    * `min(cap, n)`-th smallest (v, id) pair from [[graft.metrics.Rank.select]]
+    * — one in-buffer aggregation for domains of at most `smallGroupMax`
+    * docs, counting bisection for larger ones (a billion-page domain never
+    * sorts in one task) — broadcast-joined back as `keep = (v, id) <=
+    * threshold`. Driver state is one row per domain under the `maxDomains`
+    * bounded-collect guard.
     *
     * Null domains pool into one `null#domain` sentinel class (SQL GROUP BY
     * semantics, matching [[domainCapSample]]). Output: input columns +
@@ -212,91 +213,18 @@ object UrlOps {
       smallGroupMax: Long = 1L << 20): DataFrame = {
     require(cap > 0, s"domainCapExact: cap must be positive, got $cap")
     // v confined to 32 bits: halves the bisection pass count on the
-    // huge-domain path (each pass is a counting agg); the (v, id) total
-    // order makes collisions harmless on both paths
+    // large-domain path
     val keyed = docs
       .withColumn("cap_g", coalesce(col(domainCol).cast("string"), lit("null#domain")))
       .withColumn("cap_v", mulHashSlot(col(idCol), lit(1L << 32)))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // the kept set per domain = the min(cap, n) smallest rows under the
-    // total order (v, id). r8 split by domain size (guide §1.2 — fewer
-    // passes IS the algorithmic win here):
-    //  - domains with n <= smallGroupMax (one agg buffer of n (v,id)
-    //    pairs, ~16 B each — bounded memory): ONE aggregation computes the
-    //    k-th smallest pair in-group; keep = (v, id) <= threshold-pair.
-    //    Identical selection to the bisection (same total order, same k).
-    //  - larger domains (a billion-page mirror farm must never
-    //    materialize in one buffer): the counting-bisection path, O(log
-    //    range) passes over only those domains' rows.
-    // One sizes pass + one threshold pass replaces ~35 full-input counting
-    // passes when no domain exceeds the bound — the common case by orders
-    // of magnitude.
-    val heads = keyed.groupBy("cap_g").agg(count(lit(1)).as("n"))
-      .limit(maxDomains + 1).collect()
-    require(heads.length <= maxDomains,
-      s"more than $maxDomains domains - per-domain threshold state is " +
-        "driver-side; use a coarser domain key or raise maxDomains")
-    val largeDomains = heads.filter(_.getLong(1) > smallGroupMax)
-      .map(_.getString(0)).toSeq
-    val smallKeyed =
-      if (largeDomains.isEmpty) keyed
-      else keyed.where(!col("cap_g").isInCollection(largeDomains))
-    val idL = col(idCol).cast("long")
-    val thr = smallKeyed.groupBy("cap_g").agg(
-      count(lit(1)).as("n_domain"),
-      element_at(
-        sort_array(collect_list(struct(col("cap_v").as("v"), idL.as("i")))),
-        least(lit(cap.toLong), count(lit(1))).cast("int")).as("cap_thr"))
-    val smallOut = smallKeyed.join(broadcast(thr), Seq("cap_g"))
+    val thr = graft.metrics.Rank.select(keyed, "cap_g", Seq(col("cap_v"), col(idCol)),
+        n => Seq(math.min(cap.toLong, n)), maxDomains, smallGroupMax)
+      .select(col("cap_g"), col("n").as("n_domain"),
+        element_at(col("ranks"), 1).as("cap_thr"))
+    keyed.join(broadcast(thr), Seq("cap_g"))
       .withColumn("keep",
-        struct(col("cap_v").as("v"), idL.as("i")) <= col("cap_thr"))
+        struct(col("cap_v").as("k0"), col(idCol).cast("long").as("k1")) <= col("cap_thr"))
       .drop("cap_g", "cap_v", "cap_thr")
-    if (largeDomains.isEmpty) smallOut
-    else smallOut.unionByName(domainCapExactBisect(
-      keyed.where(col("cap_g").isInCollection(largeDomains)), idCol, cap, maxDomains))
-  }
-
-  /** Counting-bisection cap path for domains too large for an in-group
-    * threshold buffer — the pre-r8 [[domainCapExact]] body, now applied
-    * only to the over-`smallGroupMax` subset. Input: the keyed frame
-    * (`cap_g`, `cap_v` present); output: input minus helpers + `n_domain`,
-    * `keep`.
-    */
-  private def domainCapExactBisect(keyed: DataFrame, idCol: String,
-      cap: Int, maxDomains: Int): DataFrame = {
-    import graft.metrics.Metrics
-    val kth = Metrics.groupedKthSmallest(keyed, "cap_g", "cap_v",
-        (_, n) => math.min(cap.toLong, n), maxDomains)
-      .select(col("cap_g").as("kth_g"), col("n").as("n_domain"), col("kth"))
-    val staged = keyed.join(broadcast(kth), col("cap_g") === col("kth_g"))
-    // one counting pass sizes the tie stage: #{v < kth} and #{v <= kth} per
-    // domain. When NO domain has surplus ties at its threshold (c_le ==
-    // min(cap, n) everywhere — the common case), `v <= kth` IS the exact
-    // selection and the second bisection is skipped entirely.
-    val stats = staged.groupBy("cap_g")
-      .agg(sum(when(col("cap_v") < col("kth"), 1L).otherwise(0L)).as("c_lt"),
-        sum(when(col("cap_v") <= col("kth"), 1L).otherwise(0L)).as("c_le"),
-        first("n_domain").as("nd"))
-      .collect()
-    val capOf = (n: Long) => math.min(cap.toLong, n)
-    val surplus = stats.exists(r => r.getLong(2) > capOf(r.getLong(3)))
-    if (!surplus)
-      staged.withColumn("keep", col("cap_v") <= col("kth"))
-        .drop("cap_g", "cap_v", "kth_g", "kth")
-    else {
-      // tie allowance per domain: min(cap, n) − #{v < kth}; ties (v == kth)
-      // fill the remainder in ascending id order via a second bisection
-      val allow = stats.map(r =>
-        r.getString(0) -> (capOf(r.getLong(3)) - r.getLong(1))).toMap
-      val ties = staged.where(col("cap_v") === col("kth"))
-      val tieKth = Metrics.groupedKthSmallest(ties, "cap_g", idCol,
-          (g, n) => allow(g), maxDomains)
-        .select(col("cap_g").as("tie_g"), col("kth").as("tie_kth"))
-      staged.join(broadcast(tieKth), col("cap_g") === col("tie_g"), "left")
-        .withColumn("keep",
-          col("cap_v") < col("kth") ||
-            (col("cap_v") === col("kth") && col(idCol) <= col("tie_kth")))
-        .drop("cap_g", "cap_v", "kth_g", "kth", "tie_g", "tie_kth")
-    }
   }
 }

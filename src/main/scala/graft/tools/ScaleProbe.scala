@@ -131,7 +131,7 @@ object ScaleProbe {
         .unionAll(d.select(concat(lit("u"), col("doc_id")).as("tok")))
       val tHh = best3(force(
         graft.ops.TextStats.heavyHittersExact(hhToks, "tok", k = 20, counters = 256)))
-      val tQb = best3(force(graft.metrics.Metrics.exactQuantilesBisect(
+      val tQb = best3(force(graft.metrics.Metrics.exactQuantiles(
         d.select(length(col("text")).as("len")), "len")))
       // BM25: query side fixed (20 queries × 6 terms) while the corpus
       // scales ×N — tf/dl shuffles are linear in tokens, the match join is
@@ -149,8 +149,9 @@ object ScaleProbe {
           lit(".example.com/page-"), pmod(col("doc_id"), lit(1000L)),
           lit("/?utm_source=x&b=2&a=1#f")).as("url"))
       val tUrl = best3(force(graft.ops.UrlOps.urlKeepers(urld)))
-      // exact cap: pass count is log(range) (constant in N); per-pass scan
-      // grows linearly -> expect near-linear with a large constant
+      // exact cap: one in-buffer threshold pass while every domain is at
+      // most 2^20 docs, log(range) counting passes over larger domains ->
+      // expect near-linear
       val capd = d.select(col("doc_id"),
         concat(lit("dom-"), pmod(col("doc_id"), lit(23L))).as("domain"))
       val tCapX = best3(force(

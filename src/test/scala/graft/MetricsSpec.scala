@@ -128,49 +128,71 @@ class MetricsSpec extends AnyFunSuite {
       assert(got.sorted.toSeq == wantKinds, s"text=$text got=$got want=$wantKinds")
     }
   }
-  test("exactQuantilesBisect: matches sort-based order statistics; edges covered") {
+  /** The quantile wrappers' other side of the size gate: the same
+    * lower nearest-rank ranks through [[graft.metrics.Rank.select]] with
+    * every group forced onto the counting bisection. Group -> (n, values).
+    */
+  private def bisected(df: org.apache.spark.sql.DataFrame, groupCol: String,
+      valueCol: String, qs: Seq[Double], maxGroups: Int = 100000) =
+    graft.metrics.Rank.select(df, groupCol, Seq(col(valueCol)),
+        n => qs.map(q => math.floor(q * (n - 1)).toLong + 1L), maxGroups,
+        smallGroupMax = 0)
+      .collect().map(r => r.get(0) ->
+        ((r.getLong(1), r.getSeq[org.apache.spark.sql.Row](2).map(_.getLong(0)))))
+      .toMap
+
+  test("exactQuantiles: matches sort-based order statistics; edges covered") {
     // duplicates, negatives, n not a power of two
     val vals = Seq(5L, -3L, 7L, 7L, 7L, 0L, -3L, 12L, 1L, 5L, 5L)
     val df = vals.toDF("x")
     val qs = Seq(0.0, 0.5, 0.95, 1.0)
-    val got = Metrics.exactQuantilesBisect(df, "x", qs).first()
+    val got = Metrics.exactQuantiles(df, "x", qs).first()
     val sorted = vals.sorted
     def want(q: Double) = sorted(math.floor(q * (vals.size - 1)).toInt)
     assert(got.getLong(0) == vals.size)
     assert(got.getLong(1) == want(0.0) && got.getLong(2) == want(0.5))
     assert(got.getLong(3) == want(0.95) && got.getLong(4) == want(1.0))
     assert(got.schema.fieldNames.toSeq == Seq("n", "p0", "p50", "p95", "p100"))
+    assert(bisected(df.withColumn("g", lit(0)), "g", "x", qs) ==
+      Map(0 -> ((vals.size.toLong, qs.map(want)))))
     // n = 1: every quantile is the single value
-    val one = Metrics.exactQuantilesBisect(Seq(42L).toDF("x"), "x", Seq(0.5, 0.99)).first()
+    val one = Metrics.exactQuantiles(Seq(42L).toDF("x"), "x", Seq(0.5, 0.99)).first()
     assert(one.getLong(0) == 1L && one.getLong(1) == 42L && one.getLong(2) == 42L)
+    assert(bisected(Seq((0, 42L)).toDF("g", "x"), "g", "x", Seq(0.5, 0.99)) ==
+      Map(0 -> ((1L, Seq(42L, 42L)))))
     // empty (and all-null) input: n=0, null quantiles - no crash, no index
-    val empty = Metrics.exactQuantilesBisect(
+    val empty = Metrics.exactQuantiles(
       Seq.empty[Option[Long]].toDF("x"), "x", Seq(0.5)).first()
     assert(empty.getLong(0) == 0L && empty.isNullAt(1))
-    val allNull = Metrics.exactQuantilesBisect(
+    val allNull = Metrics.exactQuantiles(
       Seq[Option[Long]](None, None).toDF("x"), "x", Seq(0.5)).first()
     assert(allNull.getLong(0) == 0L && allNull.isNullAt(1))
+    assert(bisected(Seq[(Int, Option[Long])]((0, None)).toDF("g", "x"), "g", "x",
+      Seq(0.5)).isEmpty)
     // agreement with the bounded exact path's p95 on real data (same
     // lower-nearest-rank convention)
     val chars = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val b = Metrics.exactQuantilesBisect(chars, "n_chars", Seq(0.95)).first()
+    val b = Metrics.exactQuantiles(chars, "n_chars", Seq(0.95)).first()
     val viaSort = Metrics.summarizeNumbers(chars, "n_chars", Seq.empty)
       .first().getAs[Double]("p95")
     assert(b.getLong(1).toDouble == viaSort)
+    assert(bisected(chars.withColumn("g", lit(0)), "g", "n_chars", Seq(0.95))(0)._2 ==
+      Seq(b.getLong(1)))
     intercept[IllegalArgumentException] {
-      Metrics.exactQuantilesBisect(chars, "n_chars", Seq(1.5))
+      Metrics.exactQuantiles(chars, "n_chars", Seq(1.5))
     }
   }
 
-  test("groupedQuantilesBisect: per-group sort-equality, independent convergence, group guard") {
+  test("groupedQuantiles: sort-equality on both gate sides, group guard") {
     // groups with wildly different ranges and sizes converge independently
     val rows = Seq(
       ("a", 1L), ("a", 1000000L), ("a", 3L), ("a", 3L), ("a", 7L),
       ("b", -5L), ("b", -5L), ("b", -5L),
       ("c", 42L))
     val df = rows.toDF("g", "x")
-    val got = Metrics.groupedQuantilesBisect(df, "g", "x", Seq(0.5, 0.95))
+    val got = Metrics.groupedQuantiles(df, "g", "x", Seq(0.5, 0.95))
       .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
+    val viaBisection = bisected(df, "g", "x", Seq(0.5, 0.95))
     def want(g: String, q: Double) = {
       val vs = rows.filter(_._1 == g).map(_._2).sorted
       vs(math.floor(q * (vs.size - 1)).toInt)
@@ -178,12 +200,18 @@ class MetricsSpec extends AnyFunSuite {
     rows.map(_._1).distinct.foreach { g =>
       val n = rows.count(_._1 == g).toLong
       assert(got(g) == ((n, want(g, 0.5), want(g, 0.95))), s"group $g")
+      assert(viaBisection(g) == ((n, Seq(want(g, 0.5), want(g, 0.95)))), s"group $g")
     }
+    assert(viaBisection.size == 3)
     // bounded driver-state contract: refuse loudly past maxGroups
     val e = intercept[IllegalArgumentException] {
-      Metrics.groupedQuantilesBisect(df, "g", "x", Seq(0.5), maxGroups = 2)
+      Metrics.groupedQuantiles(df, "g", "x", Seq(0.5), maxGroups = 2)
     }
     assert(e.getMessage.contains("maxGroups"), e.getMessage)
+    val e0 = intercept[IllegalArgumentException] {
+      bisected(df, "g", "x", Seq(0.5), maxGroups = 2)
+    }
+    assert(e0.getMessage.contains("maxGroups"), e0.getMessage)
   }
 
 }

@@ -158,26 +158,21 @@ class OpsSpec extends AnyFunSuite {
     assert(kept == Set(2L, 7L, 8L))
   }
 
-  test("connectedComponents fails loudly when maxIter < graph diameter") {
-    // chain 1-2-3-4-5-6: min-label needs 5 rounds to reach the far end
-    val chain = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L)).toDF("a", "b")
-    val nodes = (1L to 6L).toDF("doc_id")
-    // smallGraphMax = 0 forces the distributed loop (a 5-edge graph would
-    // otherwise take the r8 driver union-find path, which has no rounds)
+  test("connectedComponentsAlternating fails loudly when maxIter is too small") {
+    // the 200-node chain needs more than 2 contraction rounds + 1
+    // confirming round: a truncated labeling must not come back
+    val chain = (1L until 200L).map(i => (i, i + 1)).toDF("a", "b")
+    val nodes = (1L to 200L).toDF("doc_id")
     val e = intercept[IllegalStateException] {
-      Dedup.connectedComponents(chain, nodes, maxIter = 2, smallGraphMax = 0)
+      Dedup.connectedComponentsAlternating(chain, nodes, maxIter = 2)
     }
-    assert(e.getMessage.contains("maxIter"))
-    // with enough rounds the same chain collapses to one component
-    val ok = Dedup.connectedComponents(chain, nodes, maxIter = 8, smallGraphMax = 0)
-      .collect().map(r => r.getAs[Long]("component")).toSet
-    assert(ok == Set(1L))
+    assert(e.getMessage.contains("maxIter"), e.getMessage)
   }
 
   test("connectedComponents small-graph driver path equals the distributed loop") {
-    // r8: graphs under smallGraphMax union-find on the driver; the labeling
-    // must be IDENTICAL to the distributed min-label fixpoint — chain,
-    // star, two components, isolated nodes, out-of-order edges
+    // graphs under smallGraphMax union-find on the driver; the labeling
+    // must be IDENTICAL to the distributed large-star/small-star fixpoint —
+    // chain, star, two components, isolated nodes, out-of-order edges
     val edges = Seq((5L, 6L), (2L, 1L), (3L, 2L), (9L, 8L), (4L, 3L))
       .toDF("a", "b")
     val nodes = (1L to 10L).toDF("doc_id")
@@ -190,40 +185,23 @@ class OpsSpec extends AnyFunSuite {
       6L -> 5L, 7L -> 7L, 8L -> 8L, 9L -> 8L, 10L -> 10L), driver)
   }
 
-  test("connectedComponents runs ONE action per propagation round") {
-    // chain 1..6 needs 5 propagation rounds + 1 no-change round = 6 rounds;
-    // the changed-count action materializes each round's labels (lazy
-    // localCheckpoint), so actions == rounds — the old shape ran a separate
-    // convergence join-action per round (2 actions/round). Counted via a
-    // QueryExecutionListener (job counts would include broadcast-build and
-    // AQE stage jobs).
-    val chain = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L)).toDF("a", "b")
-    val nodes = (1L to 6L).toDF("doc_id")
-    val actions = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
-        // lazy localCheckpoint also fires a callback without running a job;
-        // the job-running actions in this loop are exactly the count()s
-        if (funcName == "count") actions.incrementAndGet()
-      override def onFailure(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
-      Dedup.connectedComponents(chain, nodes, maxIter = 8, smallGraphMax = 0)
-      // the listener bus is async: wait for the count to stabilize
-      var last = -1
-      var stable = 0
-      var waited = 0
-      while (stable < 3 && waited < 100) {
-        Thread.sleep(100); waited += 1
-        val now = actions.get()
-        if (now == last) stable += 1 else { stable = 0; last = now }
-      }
-      assert(last <= 7, s"$last actions for 6 rounds — extra convergence actions")
-      assert(last >= 6, s"$last actions: expected one per round")
-    } finally spark.listenerManager.unregister(listener)
+  test("connectedComponents over Int and String ids (alternating fallback)") {
+    // only Long ids take the driver union-find; any other id type goes to
+    // connectedComponentsAlternating — labels are the min reachable id in
+    // the type's own order
+    val ints = Seq((2, 1), (3, 2), (9, 8)).toDF("a", "b")
+    val intNodes = (1 to 10).toDF("doc_id")
+    val gotInt = Dedup.connectedComponents(ints, intNodes).collect()
+      .map(r => r.getAs[Int]("doc_id") -> r.getAs[Int]("component")).toMap
+    assert(gotInt == Map(1 -> 1, 2 -> 1, 3 -> 1, 4 -> 4, 5 -> 5, 6 -> 6,
+      7 -> 7, 8 -> 8, 9 -> 8, 10 -> 10), gotInt)
+    val strs = Seq(("b", "a"), ("c", "b"), ("y", "x"), ("x", "w10"))
+      .toDF("a", "b")
+    val strNodes = Seq("a", "b", "c", "w10", "x", "y", "z").toDF("doc_id")
+    val gotStr = Dedup.connectedComponents(strs, strNodes).collect()
+      .map(r => r.getAs[String]("doc_id") -> r.getAs[String]("component")).toMap
+    assert(gotStr == Map("a" -> "a", "b" -> "a", "c" -> "a", "w10" -> "w10",
+      "x" -> "w10", "y" -> "w10", "z" -> "z"), gotStr)
   }
 
   test("sequence packing: greedy first-fit in id order, oversize docs isolated") {
@@ -483,8 +461,8 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("alternating CC: 200-node chain collapses in O(log n) rounds") {
-    // diameter 199: min-label would need 199 rounds (and throws at its
-    // default cap); the large-star/small-star promotion path converges fast
+    // diameter 199: min-label propagation would need 199 rounds; the
+    // large-star/small-star path converges fast
     val chain = (1L until 200L).map(i => (i, i + 1)).toDF("a", "b")
     val nodes = (1L to 200L).toDF("doc_id")
     val got = Dedup.connectedComponentsAlternating(chain, nodes, maxIter = 15)
@@ -503,7 +481,7 @@ class OpsSpec extends AnyFunSuite {
     val nodes = (1L to n).toDF("doc_id")
     val alt = Dedup.connectedComponentsAlternating(edges, nodes)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val ml = Dedup.connectedComponents(edges, nodes, maxIter = 60)
+    val ml = Dedup.connectedComponents(edges, nodes) // min-label fixpoint by union-find
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(alt == ml)
     // isolated nodes keep their own id

@@ -139,37 +139,42 @@ class UrlOpsSpec extends AnyFunSuite {
       (100L until 103L).map(i => (i, "tiny.net")) ++
       (200L until 230L).map(i => (i, null.asInstanceOf[String])) ++
       // 12 docs ALL sharing one v (ids ≡ 7 mod p) — the threshold lands ON
-      // the tie value and the second bisection must pick the 10 smallest ids
+      // the tie value and the id order must pick the 10 smallest ids
       (0L until 12L).map(j => (7L + j * 1048573L, "ties.org")))
       .toDF("doc_id", "domain")
-    val out = UrlOps.domainCapExact(docs, "domain", cap = 10).cache()
-    try {
-      val kept = out.groupBy("domain").agg(
-        sum(when(col("keep"), 1L).otherwise(0L)).as("k"),
-        count(lit(1)).as("n")).collect()
-        .map(r => Option(r.getString(0)).getOrElse("null") ->
-          ((r.getLong(1), r.getLong(2)))).toMap
-      assert(kept("big.com") === ((10L, 40L)))   // exactly cap
-      assert(kept("tiny.net") === ((3L, 3L)))    // under cap: all
-      assert(kept("null") === ((10L, 30L)))      // null class capped too
-      assert(kept("ties.org") === ((10L, 12L)))  // all-tied domain: still exact
-      // all-tied domain: kept == the 10 smallest ids
-      val tieKept = out.where(col("domain") === "ties.org" && col("keep"))
-        .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
-      assert(tieKept === (0L until 10L).map(j => 7L + j * 1048573L))
-      // tie correctness: of a colliding (v, v) pair the SMALLER id wins if
-      // only one fits — verify the kept set equals the (v, id)-order prefix
-      val rows = out.where(col("domain") === "big.com")
-        .select("doc_id", "keep").collect()
-        .map(r => (r.getLong(0), r.getBoolean(1)))
-      val byOrder = rows.map(_._1).sortBy(id => (((id % 1048573L) * 2654435761L) % 4294967296L, id))
-      val expectKept = byOrder.take(10).toSet
-      rows.foreach { case (id, keep) => assert(keep === expectKept.contains(id), s"id $id") }
-      // determinism
-      val again = UrlOps.domainCapExact(docs, "domain", cap = 10)
-      assert(out.select("doc_id", "keep").except(
-        again.select("doc_id", "keep")).count() === 0)
-    } finally out.unpersist()
+    // both sides of the size gate: every domain in-buffer (default) and
+    // every domain through the bisection (0), where ties.org's threshold
+    // sits on a shared v and is settled by the id level
+    for (gate <- Seq(1L << 20, 0L)) {
+      val out = UrlOps.domainCapExact(docs, "domain", cap = 10, smallGroupMax = gate).cache()
+      try {
+        val kept = out.groupBy("domain").agg(
+          sum(when(col("keep"), 1L).otherwise(0L)).as("k"),
+          count(lit(1)).as("n")).collect()
+          .map(r => Option(r.getString(0)).getOrElse("null") ->
+            ((r.getLong(1), r.getLong(2)))).toMap
+        assert(kept("big.com") === ((10L, 40L)))   // exactly cap
+        assert(kept("tiny.net") === ((3L, 3L)))    // under cap: all
+        assert(kept("null") === ((10L, 30L)))      // null class capped too
+        assert(kept("ties.org") === ((10L, 12L)))  // all-tied domain: still exact
+        // all-tied domain: kept == the 10 smallest ids
+        val tieKept = out.where(col("domain") === "ties.org" && col("keep"))
+          .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
+        assert(tieKept === (0L until 10L).map(j => 7L + j * 1048573L))
+        // tie correctness: of a colliding (v, v) pair the SMALLER id wins if
+        // only one fits — verify the kept set equals the (v, id)-order prefix
+        val rows = out.where(col("domain") === "big.com")
+          .select("doc_id", "keep").collect()
+          .map(r => (r.getLong(0), r.getBoolean(1)))
+        val byOrder = rows.map(_._1).sortBy(id => (((id % 1048573L) * 2654435761L) % 4294967296L, id))
+        val expectKept = byOrder.take(10).toSet
+        rows.foreach { case (id, keep) => assert(keep === expectKept.contains(id), s"id $id") }
+        // determinism
+        val again = UrlOps.domainCapExact(docs, "domain", cap = 10, smallGroupMax = gate)
+        assert(out.select("doc_id", "keep").except(
+          again.select("doc_id", "keep")).count() === 0)
+      } finally out.unpersist()
+    }
     intercept[IllegalArgumentException](UrlOps.domainCapExact(docs, "domain", cap = 0))
   }
 
@@ -209,13 +214,13 @@ class UrlOpsSpec extends AnyFunSuite {
     val docs = (1 to 300).map(_ =>
       (math.abs(rnd.nextLong()) % 100000000L, s"d${rnd.nextInt(5)}.com"))
       .distinct.toDF("doc_id", "domain")
-    for (cap <- Seq(1, 7)) {
-      val bad = UrlOps.domainCapExact(docs, "domain", cap = cap)
+    for (cap <- Seq(1, 7); gate <- Seq(1L << 20, 0L)) {
+      val bad = UrlOps.domainCapExact(docs, "domain", cap = cap, smallGroupMax = gate)
         .groupBy("domain").agg(
           sum(when(col("keep"), 1L).otherwise(0L)).as("k"),
           count(lit(1)).as("n"))
         .where(col("k") =!= least(lit(cap.toLong), col("n")))
-      assert(bad.count() === 0, s"cap=$cap")
+      assert(bad.count() === 0, s"cap=$cap smallGroupMax=$gate")
     }
   }
 
