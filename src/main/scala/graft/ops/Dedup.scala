@@ -10,9 +10,10 @@ import org.apache.spark.sql.functions._
   * the LSH designs never materialize the O(n²) pair space:
   *
   *  - exact: hash-groupBy on sha2(text) — one shuffle on the hash;
-  *  - MinHash+LSH: shingle → H minhashes → B bands → join on (band, hash) —
-  *    shuffle is proportional to corpus size × B, candidate verification
-  *    touches only same-bucket pairs;
+  *  - MinHash+LSH: shingle → H minhashes → B bands → candidate pairs per
+  *    (band, hash) bucket — shuffle is proportional to corpus size × B,
+  *    candidate verification touches only same-bucket pairs (one kernel,
+  *    [[verifiedPairs]], for every eager LSH / SimHash pair path);
   *  - SimHash: 64-bit signature, Hamming-≤k via pigeonhole band join;
   *  - n-gram Jaccard: exact verification predicate used on LSH candidates
   *    (or brute-force at test scale).
@@ -106,10 +107,10 @@ object Dedup {
   /** A class key that leaves null-text docs as SINGLETONS (each its own
     * class, keyed by its own id) instead of letting `Window.partitionBy`
     * group every NULL key into one giant bogus duplicate class. This is the
-    * pair-path semantics: a null signature/shingle set fails the candidate
-    * equality join, so [[simhashExactDups]]/[[minhashNearDups]] emit no
-    * pairs for null texts and CC leaves them singletons — the keeper twins
-    * must decide the same relation.
+    * pair-path semantics: a null token key/shingle set never verifies, so
+    * [[simhashExactDups]]/[[minhashNearDups]] emit no pairs for null texts
+    * and CC leaves them singletons — the keeper twins must decide the same
+    * relation.
     */
   private[ops] def nullSafeKey(key: Column, idCol: String): Column =
     coalesce(key, concat(lit("null#"), col(idCol).cast("string")))
@@ -125,12 +126,12 @@ object Dedup {
     * shuffle/broadcast sides plus a hash-relation build and probe.
     *
     * Memory contract: one member array per bucket lives in the aggregation
-    * buffer, so callers MUST run their hot-key guard BEFORE this helper —
-    * after a `guardHotKey(maxFreq)` pass the arrays are bounded by maxFreq
-    * (8·maxFreq bytes). An unguarded mega-bucket belongs to the guard's
-    * loud refusal, not to this buffer.
+    * buffer, so [[verifiedPairs]] runs the hot-key guard BEFORE this
+    * helper — after a guard pass at `maxFreq` the arrays are bounded by
+    * maxFreq (8·maxFreq bytes). A guarded mega-bucket belongs to the
+    * guard's loud refusal, not to this buffer.
     */
-  private[ops] def bucketPairs(
+  private def bucketPairs(
       keyed: DataFrame,
       keyCols: Seq[String],
       idCol: String): DataFrame =
@@ -150,44 +151,114 @@ object Dedup {
     * local bench at full width and defers to the configured shuffle
     * parallelism on a real cluster — never a constant.
     */
-  private[ops] def bucketParts(df: DataFrame): Int = {
+  private def bucketParts(df: DataFrame): Int = {
     val s = df.sparkSession
     math.max(s.sparkContext.defaultParallelism,
       s.sessionState.conf.numShufflePartitions)
   }
 
-  /** Shared hot-key guard for the pair-emitting paths: if any key of
-    * `keyed` occurs more than `maxFreq` times, release `cleanup` and throw
-    * with the caller's message (built from a `k=v, …` description of the
-    * hot key and its frequency). For a true m-member duplicate class the
-    * PAIR output is itself Θ(m²), so no pair-emitting scheme can do better
-    * than refuse and point at the linear keeper form — the
-    * `ngramJaccardCounts` maxDocFreq discipline, shared by all three
-    * callers. One cheap aggregation over the (already persisted) narrow
-    * keyed frame; lookups by field NAME so a schema tweak fails loudly
-    * instead of silently reading the wrong ordinal.
+  /** Hot-key guard of [[verifiedPairs]]: if any key of `keyed` occurs more
+    * than `maxFreq` times, throw with the caller's message (built from a
+    * `k=v, …` description of the hot key and its frequency). For a true
+    * m-member duplicate class the PAIR output is itself Θ(m²), so no
+    * pair-emitting scheme can do better than refuse and point at the
+    * linear keeper form — the `ngramJaccardCounts` maxDocFreq discipline.
+    * One cheap aggregation over the (already persisted) narrow keyed
+    * frame; lookups by field NAME so a schema tweak fails loudly instead
+    * of silently reading the wrong ordinal.
     */
-  private def guardHotKey(
-      keyed: DataFrame,
-      keyCols: Seq[String],
-      maxFreq: Int,
-      cleanup: () => Unit)(
+  private def guardHotKey(keyed: DataFrame, keyCols: Seq[String], maxFreq: Int)(
       msg: (String, Long) => String): Unit =
     if (maxFreq > 0) {
       val hot = keyed.groupBy(keyCols.map(col): _*).agg(count(lit(1)).as("freq"))
         .where(col("freq") > maxFreq).limit(1).collect()
       if (hot.nonEmpty) {
-        cleanup()
         val row = hot.head
         val keyDesc = keyCols.map(c => s"$c=${row.getAs[Any](c)}").mkString(", ")
         throw new IllegalStateException(msg(keyDesc, row.getAs[Long]("freq")))
       }
     }
 
+  /** The one candidate → verify kernel of the pair-emitting operators
+    * ([[minhashNearDups]], [[simhashExactDups]], [[conversationDupPairs]],
+    * [[Similarity.lshTopK]], [[Similarity.cosineNearDups]] and the
+    * hot-cluster sub-split of [[Similarity.semanticNearDups]]). `keyed`
+    * holds one (idCol, keyCols…) row per bucket membership. The kernel
+    * pins the bucket-key exchange ([[bucketParts]]), runs the hot-key
+    * guard, enumerates candidate (a, b) pairs with [[bucketPairs]] —
+    * deduped when an id can sit in several buckets, i.e. under more than
+    * one key column — and returns `verify`'s output persisted and
+    * materialized; the caller owns its `unpersist()`. Every intermediate
+    * is released before returning, also when the guard refuses or a step
+    * throws.
+    *
+    * A guarded call (`maxFreq > 0`) caches the banded frame (guard and
+    * pair aggregation then both run exchange-free on its partitioning) and
+    * materializes the candidates eagerly: they feed several verify
+    * branches, and lazy persists raced under AQE's concurrent stage
+    * submission. An unguarded call keeps both lazy — the banded frame has
+    * one consumer and sign-LSH buckets hold ~128 ids by construction.
+    * `verify` gets the candidates and `keep`, which persists and counts a
+    * per-id attribute frame and releases it with the other intermediates.
+    *
+    * A hot bucket is refused here with `"<op>: " + refusal(key, freq)`;
+    * this is the one place hot-bucket routing belongs. Internal actions
+    * carry `"<op>: <step>"` job descriptions.
+    */
+  private[ops] def verifiedPairs(
+      op: String,
+      keyed: DataFrame,
+      keyCols: Seq[String],
+      idCol: String,
+      maxFreq: Int = 0,
+      refusal: (String, Long) => String = (_, _) => "")(
+      verify: (DataFrame, DataFrame => DataFrame) => DataFrame): DataFrame = {
+    def step[T](name: String)(body: => T): T =
+      graft.obs.JobLabel(keyed.sparkSession, s"$op: $name")(body)
+    val held = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def keep(df: DataFrame, name: String): DataFrame = {
+      held += df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      step(name)(df.count())
+      df
+    }
+    val guarded = maxFreq > 0
+    try {
+      val banded = keyed.repartition(bucketParts(keyed), keyCols.map(col): _*)
+      if (guarded) held += banded.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      step("hot-key guard")(guardHotKey(banded, keyCols, maxFreq)(
+        (key, freq) => s"$op: ${refusal(key, freq)}"))
+      val pairs = bucketPairs(banded, keyCols, idCol)
+      val distinctPairs = if (keyCols.size > 1) pairs.distinct() else pairs
+      val cand = if (guarded) keep(distinctPairs, "candidate count") else distinctPairs
+      val result = keep(verify(cand, keep(_, "per-id attribute count")), "result count")
+      held -= result // the caller owns the result
+      result
+    } finally held.foreach(_.unpersist())
+  }
+
+  /** `pairs` (a, b) with the per-id attribute frame `attrs` (keyed on
+    * `idCol`) joined onto both ends: every other column c of `attrs`
+    * arrives as c_a and c_b.
+    */
+  private[ops] def bothEnds(pairs: DataFrame, attrs: DataFrame, idCol: String): DataFrame = {
+    def end(s: String) = attrs.toDF(attrs.columns.toSeq.map(c =>
+      if (c == idCol) s else s"${c}_$s"): _*)
+    pairs.join(end("a"), "a").join(end("b"), "b")
+  }
+
+  /** The rows of `docs` whose id is an end of a candidate pair — the
+    * left-semi prune that keeps a verify step's text work proportional to
+    * the candidates, not the corpus.
+    */
+  private def candidateDocs(docs: DataFrame, cand: DataFrame, idCol: String): DataFrame =
+    docs.join(cand.select(explode(array(col("a"), col("b"))).as(idCol)).distinct(),
+      Seq(idCol), "left_semi")
+
   /** Exact duplicates: every doc mapped to the smallest doc_id sharing its
-    * text. One shuffle (window over text hash). Null texts follow SQL
-    * GROUP BY semantics (all NULLs one class) — matching the
-    * `dedup_exact` DuckDB window oracle, which partitions the same way.
+    * text. One [[keepersByKey]] pass keyed on the text's sha2 digest (a
+    * min-id aggregation plus a join back). Null texts follow SQL GROUP BY
+    * semantics (all NULLs one class) — matching the `dedup_exact` DuckDB
+    * window oracle, which partitions the same way.
     */
   def exact(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame =
     keepersByKey(docs, idCol, sha2(col(textCol), 256))
@@ -199,10 +270,11 @@ object Dedup {
     * group directly by the VERIFIED key (sha2 digest of the sorted
     * ROOT-lowercased token multiset, [[graft.functions.TokenMultisetKeyExpr]]
     * — the same key the pair path verifies with, so both paths decide the
-    * same relation) and keep the min id per class. One digest-keyed window
-    * shuffle, output linear in the corpus, no candidate join, no connected
-    * components (exact classes ARE the components). Same output shape as
-    * [[exact]]: (idCol, keeper_id, is_dup).
+    * same relation) and keep the min id per class. One digest-keyed
+    * [[keepersByKey]] pass (aggregation plus join back), output linear in
+    * the corpus, no candidate join, no connected components (exact classes
+    * ARE the components). Same output shape as [[exact]]: (idCol,
+    * keeper_id, is_dup).
     *
     * Quality-aware keepers compose through [[qualityKeepers]]: rename
     * `keeper_id` to `component` and pass a score frame — the class key is
@@ -228,8 +300,8 @@ object Dedup {
     * sorted distinct shingle set and keep the min id per class. Shingles
     * contain spaces but no other whitespace (tokens are `\s`-split), so the
     * newline-join is an injective encoding of the sorted set. One
-    * digest-keyed window shuffle; output linear; no bands, no candidate
-    * join. Same shape as [[exact]]; null-text docs are singletons
+    * digest-keyed [[keepersByKey]] pass; output linear; no bands, no
+    * candidate join. Same shape as [[exact]]; null-text docs are singletons
     * (pair-path semantics — see [[nullSafeKey]]).
     */
   def shingleSetKeepers(
@@ -255,7 +327,7 @@ object Dedup {
 
   /** MinHash signature — single-pass custom expression (each shingle's bytes
     * hashed once, H integer mixes derive the per-function values). The HOF
-    * formulation this is bit-equal to (pinned in DedupSpec) re-hashed every
+    * formulation this is bit-equal to (pinned in OpsSpec) re-hashed every
     * shingle H times across H interpreted array passes.
     */
   def minhashSignature(textCol: Column, numHashes: Int = 64, k: Int = 3): Column =
@@ -272,22 +344,34 @@ object Dedup {
       bands: Int = 16
   ): DataFrame = {
     require(numHashes % bands == 0)
-    val r = numHashes / bands
     docs
       .select(col(idCol), minhashSignature(col(textCol), numHashes).as("sig"))
-      .select(col(idCol), posexplode(
-        transform(sequence(lit(0), lit(bands - 1)),
-          b => hash(slice(col("sig"), b * lit(r) + 1, lit(r))))).as(Seq("band", "band_hash")))
+      .select(col(idCol), bandHashes(col("sig"), bands, numHashes / bands))
   }
+
+  /** (band, band_hash) rows of a signature array: band b hashes elements
+    * [b·r, (b+1)·r).
+    */
+  private def bandHashes(sig: Column, bands: Int, r: Int): Column =
+    posexplode(transform(sequence(lit(0), lit(bands - 1)),
+      b => hash(slice(sig, b * lit(r) + 1, lit(r))))).as(Seq("band", "band_hash"))
 
   /** Candidate pairs from LSH buckets, verified with exact shingle Jaccard.
     * Returns (a, b, jaccard) with a < b and jaccard >= threshold.
     *
-    * Scale shape: the narrow (id, band, band_hash) frame is persisted so the
-    * self-join computes signatures ONCE; the shuffle key is (band, band_hash)
-    * only. Verification re-reads shingles only for docs that appear in a
+    * Scale shape ([[verifiedPairs]], guarded): the narrow (id, band,
+    * band_hash) frame is cached on its bucket-key partitioning, so
+    * signatures compute ONCE and the shuffle key is (band, band_hash) only.
+    * Verification re-reads shingles only for docs that appear in a
     * candidate pair (left-semi prune) — at production scale candidates ≪
     * corpus, so the second text scan touches a small fraction of the data.
+    *
+    * Hot buckets: one (band, band_hash) bucket holding m docs produces
+    * O(m²) candidate rows BEFORE verification can prune — at corpus scale a
+    * million-member exact-duplicate class (empty docs, boilerplate) lands
+    * in one bucket of EVERY band. A bucket above `maxBucketFreq` is refused
+    * loudly, pointing at the linear keeper forms ([[shingleSetKeepers]] for
+    * the threshold-1.0 regime).
     *
     * Eager-materialization contract: this call is an ACTION, not lazy plan
     * construction — the verified-pair result is persisted (MEMORY_AND_DISK)
@@ -304,68 +388,21 @@ object Dedup {
       bands: Int = 16,
       threshold: Double = 0.7,
       maxBucketFreq: Int = 1000
-  ): DataFrame = {
-    // r8: cache the banded frame ALREADY hash-partitioned on the bucket
-    // key — the guard aggregation and the bucket-pair aggregation then
-    // both run exchange-free on the cached partitioning (one shuffle paid
-    // once at cache build instead of one per aggregation). Partition count
-    // comes from spark.sql.shuffle.partitions — session-scale, not a
-    // constant. A guard-worthy mega-bucket makes its partition a spilled
-    // straggler during the cache build, but MEMORY_AND_DISK streams it and
-    // the guard still refuses loudly right after.
-    val b = minhashBands(docs, idCol, textCol, numHashes, bands)
-      .repartition(bucketParts(docs), col("band"), col("band_hash"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // Hot-bucket guard (the ngramJaccardCounts maxDocFreq discipline applied
-    // to LSH buckets): one (band, band_hash) bucket holding m docs produces
-    // O(m²) candidate rows BEFORE verification can prune — at corpus scale a
-    // million-member exact-duplicate class (empty docs, boilerplate) lands in
-    // one bucket of EVERY band. Pair output for such a class is itself
-    // quadratic, so no pair-emitting scheme can do better than refuse: fail
-    // loudly and point at the linear keeper forms ([[shingleSetKeepers]] for
-    // the threshold-1.0 regime) instead of silently running an m² join.
-    guardHotKey(b, Seq("band", "band_hash"), maxBucketFreq, () => b.unpersist()) {
-      (key, freq) =>
-        s"minhashNearDups: LSH bucket ($key) holds $freq docs > " +
-          s"maxBucketFreq=$maxBucketFreq — a duplicate class this size has " +
-          "quadratic pair output. Use the linear keeper form " +
-          "(Dedup.shingleSetKeepers / multisetKeepers) for exact-regime " +
-          "classes, or raise maxBucketFreq deliberately."
+  ): DataFrame =
+    verifiedPairs("minhashNearDups", minhashBands(docs, idCol, textCol, numHashes, bands),
+        Seq("band", "band_hash"), idCol, maxBucketFreq, (key, freq) =>
+          s"LSH bucket ($key) holds $freq docs > " +
+            s"maxBucketFreq=$maxBucketFreq — a duplicate class this size has " +
+            "quadratic pair output. Use the linear keeper form " +
+            "(Dedup.shingleSetKeepers / multisetKeepers) for exact-regime " +
+            "classes, or raise maxBucketFreq deliberately.") { (cand, keep) =>
+      val sh = keep(candidateDocs(docs, cand, idCol)
+        .select(col(idCol), shingles(col(textCol)).as("sh")))
+      bothEnds(cand, sh, idCol)
+        .withColumn("jaccard", jaccardArrays(col("sh_a"), col("sh_b")))
+        .where(col("jaccard") >= threshold)
+        .select("a", "b", "jaccard")
     }
-    // r8: candidates via [[bucketPairs]] — one aggregation shuffle of the
-    // banded frame replaces the two-sided bucket self-join, and singleton
-    // buckets are pruned before pair enumeration. Both multi-consumer
-    // frames (candidates feeds the id-prune AND the verify join; sh feeds
-    // both verify sides) are materialized EAGERLY: lazy persists raced
-    // under AQE's concurrent stage submission — the profiled plan re-ran
-    // the shingle chain 3× before any cache block landed.
-    val candidates = bucketPairs(b, Seq("band", "band_hash"), idCol)
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    candidates.count()
-    // one explode over the cached pair frame instead of a two-branch
-    // union — the pair cache is scanned once
-    val candidateIds = candidates
-      .select(explode(array(col("a"), col("b"))).as(idCol))
-      .distinct()
-    val sh = docs.join(candidateIds, Seq(idCol), "left_semi")
-      .select(col(idCol), shingles(col(textCol)).as("sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    sh.count()
-    val result = candidates
-      .join(sh.withColumnRenamed(idCol, "a").withColumnRenamed("sh", "sh_a"), "a")
-      .join(sh.withColumnRenamed(idCol, "b").withColumnRenamed("sh", "sh_b"), "b")
-      .withColumn("jaccard", jaccardArrays(col("sh_a"), col("sh_b")))
-      .where(col("jaccard") >= threshold)
-      .select("a", "b", "jaccard")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // materialize, then release the intermediates — repeated invocations in a
-    // long-lived session would otherwise accumulate cached band/shingle blocks.
-    // The (small) verified-pair result is the only frame the caller owns.
-    result.count()
-    b.unpersist(); candidates.unpersist(); sh.unpersist()
-    result
-  }
 
   /** Exact Jaccard over two string arrays (distinct semantics). */
   def jaccardArrays(a: Column, b: Column): Column = {
@@ -973,93 +1010,55 @@ object Dedup {
       .select(col(idCol), col("tok_start"), col("tok_end"), col("start"), col("end"))
   }
 
-  /** SimHash near-dup candidates: Hamming(sig_a, sig_b) <= maxDist via
-    * pigeonhole — split the 64-bit signature into (maxDist+1) chunks; equal
-    * pairs must share at least one chunk ⇒ join per chunk, verify distance.
-    */
   /** Token-multiset duplicate pairs via SimHash bucketing: candidates are
-    * the distance-0 signature collisions (the pigeonhole join degenerates
-    * to ONE join on the full 64-bit signature), then VERIFIED by exact
-    * equality of the sorted lowercased token multiset. The verify step
-    * makes the result exact — a 64-bit signature collision between
-    * different multisets (rare for independent texts, but LIKELY between
-    * one-token-apart near twins, whose vote counters each move by ±1) is
-    * filtered out — while completeness is structural: equal multisets give
-    * equal signatures, so every true pair is a candidate with probability
-    * 1. This is the property that lets the driver pin the whole SimHash
-    * path (signature expression, band join, verification) to an exact
-    * multiset-equality SQL oracle.
+    * the distance-0 signature collisions (the pigeonhole join of
+    * [[simhashNearDups]] degenerates to ONE bucket key, the full 64-bit
+    * signature), then VERIFIED by exact equality of the sorted lowercased
+    * token multiset. The verify step makes the result exact — a 64-bit
+    * signature collision between different multisets (rare for independent
+    * texts, but LIKELY between one-token-apart near twins, whose vote
+    * counters each move by ±1) is filtered out — while completeness is
+    * structural: equal multisets give equal signatures, so every true pair
+    * is a candidate with probability 1. This is the property that lets
+    * the `dedup_simhash_pairs` query pin the whole SimHash path (signature
+    * expression, bucketing, verification) to an exact multiset-equality
+    * SQL oracle.
     *
-    * Scale shape: one signature-keyed shuffle for candidates; the sorted
-    * token keys are recomputed only for docs appearing in a candidate pair
-    * (left-semi prune), as in [[minhashNearDups]].
+    * Scale shape ([[verifiedPairs]], guarded): one signature-keyed shuffle
+    * for candidates; the narrow (id, sig) frame is computed once, and a
+    * pair is emitted exactly once (one bucket per id, so no distinct). The
+    * sorted token keys are recomputed only for docs appearing in a
+    * candidate pair (left-semi prune), as in [[minhashNearDups]]. A
+    * signature shared by more than `maxSigFreq` docs (empty/near-empty
+    * texts at real-corpus scale) is refused, pointing at
+    * [[multisetKeepers]].
+    *
+    * Eager-materialization contract: same as [[minhashNearDups]] — the
+    * call is an action; the returned verified-pair frame is persisted and
+    * materialized, all intermediates released; caller owns `unpersist()`.
     */
   def simhashExactDups(
       docs: DataFrame,
       idCol: String = "doc_id",
       textCol: String = "text",
       maxSigFreq: Int = 1000
-  ): DataFrame = {
-    // at distance 0 the pigeonhole machinery reduces to ONE equality join
-    // on the full 64-bit signature — built directly here so the signature
-    // scan runs once (persisted narrow (id, sig) frame) instead of the
-    // general-banded plan, whose lazy composition replicated the signature
-    // expression ~30× across the join/filter tree (plan-compile bloat +
-    // repeated corpus scans at scale).
-    //
-    // Eager-materialization contract: same as [[minhashNearDups]] — the
-    // call is an action; the returned verified-pair frame is persisted and
-    // materialized, all intermediates released; caller owns `unpersist()`.
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    // r8: cached pre-partitioned on the signature — guard agg and the
-    // bucket-pair agg both run exchange-free (see minhashNearDups note)
-    val sigs = docs
-      .select(col(idCol).as("id"), graft.functions.gf.simhash64(col(textCol)).as("sig"))
-      .repartition(bucketParts(docs), col("sig"))
-      .persist(lvl)
-    // Hot-signature guard: a corpus where m docs collapse to one signature
-    // (empty/near-empty texts at real-corpus scale) makes this equality
-    // self-join emit O(m²) rows BEFORE the verify step can prune.
-    guardHotKey(sigs, Seq("sig"), maxSigFreq, () => sigs.unpersist()) {
-      (key, freq) =>
-        s"simhashExactDups: signature ($key) is shared by $freq docs > " +
-          s"maxSigFreq=$maxSigFreq — pair output for a class this size is " +
-          "quadratic. Use the linear keeper form (Dedup.multisetKeepers) " +
-          "for exact-duplicate classes, or raise maxSigFreq deliberately."
+  ): DataFrame =
+    verifiedPairs("simhashExactDups",
+        docs.select(col(idCol).as("id"), graft.functions.gf.simhash64(col(textCol)).as("sig")),
+        Seq("sig"), "id", maxSigFreq, (key, freq) =>
+          s"signature ($key) is shared by $freq docs > " +
+            s"maxSigFreq=$maxSigFreq — pair output for a class this size is " +
+            "quadratic. Use the linear keeper form (Dedup.multisetKeepers) " +
+            "for exact-duplicate classes, or raise maxSigFreq deliberately.") { (cand, keep) =>
+      // the token-multiset key via [[graft.functions.TokenMultisetKeyExpr]]
+      // — the SAME Locale.ROOT lowering the signature uses, so "equal key ⇒
+      // equal signature" holds for all text (Spark's lower() would fall
+      // back to default-locale String.toLowerCase on non-ASCII, a latent
+      // sig/key divergence)
+      val keys = keep(candidateDocs(docs, cand, idCol)
+        .select(col(idCol), graft.functions.gf.tokenMultisetKey(col(textCol)).as("key")))
+      bothEnds(cand, keys, idCol).where(col("key_a") === col("key_b")).select("a", "b")
     }
-    // r8: candidates via [[bucketPairs]] (one aggregation shuffle keyed on
-    // the signature; singleton signatures — nearly every doc — pruned
-    // before pair enumeration; no distinct needed: one bucket per id, so a
-    // pair is emitted exactly once, as in the old l<r self-join). cand and
-    // keys are both materialized EAGERLY: each feeds two downstream join
-    // branches, and lazy persists raced under AQE's concurrent stage
-    // submission — the profiled plan re-ran the semi-join + multiset-key
-    // chain up to 6× before any cache block landed.
-    val cand = bucketPairs(sigs, Seq("sig"), "id").persist(lvl)
-    cand.count()
-    val candidateIds = cand
-      .select(explode(array(col("a"), col("b"))).as(idCol))
-      .distinct()
-    // the token-multiset key via [[graft.functions.TokenMultisetKeyExpr]] —
-    // the SAME Locale.ROOT lowering the signature uses, so "equal key ⇒
-    // equal signature" holds for all text (Spark's lower() would fall back
-    // to default-locale String.toLowerCase on non-ASCII, a latent sig/key
-    // divergence). Recomputed only for docs in a candidate pair (left-semi
-    // prune).
-    val keys = docs.join(candidateIds, Seq(idCol), "left_semi")
-      .select(col(idCol), graft.functions.gf.tokenMultisetKey(col(textCol)).as("key"))
-      .persist(lvl)
-    keys.count()
-    val result = cand
-      .join(keys.withColumnRenamed(idCol, "a").withColumnRenamed("key", "key_a"), "a")
-      .join(keys.withColumnRenamed(idCol, "b").withColumnRenamed("key", "key_b"), "b")
-      .where(col("key_a") === col("key_b"))
-      .select("a", "b")
-      .persist(lvl)
-    result.count()
-    sigs.unpersist(); cand.unpersist(); keys.unpersist()
-    result
-  }
 
   /** Conversation-level duplicate pairs over a TURNS table — MinHash-LSH
     * banding over each conversation's per-turn fingerprint set, candidates
@@ -1074,7 +1073,7 @@ object Dedup {
     *    makes the tuple set determine the ORDERED conversation;
     *  - conversation signature element j = `min(xxhash64(h, j))` — a MinHash
     *    of the turn-fingerprint set as `numHashes` plain `min` aggregates;
-    *  - LSH bands over the signature → band-keyed candidate self-join
+    *  - LSH bands over the signature → band-keyed candidates
     *    (equal conversations collide in EVERY band ⇒ recall 1 for exact
     *    copies; a conversation differing in one turn has Jaccard
     *    (n−1)/(n+1) and is caught per normal LSH collision odds);
@@ -1086,12 +1085,14 @@ object Dedup {
     *    elimination and shows the second lane splits it).
     *
     * Returns verified (a, b) pairs, a < b. Shuffles: one turn→conversation
-    * aggregation keyed on `convCol`, one band-keyed candidate join over
-    * narrow (id, band, hash) rows, one id-keyed verify join. Same
-    * eager-materialization contract as [[minhashNearDups]] (result
-    * persisted + materialized; caller owns `unpersist()`); same hot-bucket
-    * guard (the linear alternative for exact classes is the
-    * `multisetFingerprint` window — `conv_dedup_fp`'s shape — not pairs).
+    * aggregation keyed on `convCol` (cached: it feeds both the bands and
+    * the verify join), one band-keyed candidate aggregation over narrow
+    * (id, band, hash) rows ([[verifiedPairs]], guarded), one id-keyed
+    * verify join. Same eager-materialization contract as
+    * [[minhashNearDups]] (result persisted + materialized; caller owns
+    * `unpersist()`); same hot-bucket guard (the linear alternative for
+    * exact classes is the `multisetFingerprint` window — `conv_dedup_fp`'s
+    * shape — not pairs).
     */
   def conversationDupPairs(
       turns: DataFrame,
@@ -1103,8 +1104,6 @@ object Dedup {
       maxBucketFreq: Int = 1000
   ): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
-    val r = numHashes / bands
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val h = xxhash64(col(turnIdxCol), col(textCol))
     val sigAggs = (0 until numHashes).map(j => min(xxhash64(h, lit(j))).as(s"m$j"))
     val aggs = sigAggs ++ Seq(bit_xor(h).as("fp"),
@@ -1112,43 +1111,29 @@ object Dedup {
       count(lit(1)).as("n_turns"))
     val sigs = turns.groupBy(col(convCol).as("id"))
       .agg(aggs.head, aggs.tail: _*)
-      .persist(lvl)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val sigArr = array((0 until numHashes).map(j => col(s"m$j")): _*)
-    val banded = sigs.select(col("id"), posexplode(
-        transform(sequence(lit(0), lit(bands - 1)),
-          b => hash(slice(sigArr, b * lit(r) + 1, lit(r))))).as(Seq("band", "band_hash")))
-      .repartition(bucketParts(turns), col("band"), col("band_hash"))
-      .persist(lvl)
-    guardHotKey(banded, Seq("band", "band_hash"), maxBucketFreq,
-      () => { sigs.unpersist(); banded.unpersist() }) { (key, freq) =>
-      s"conversationDupPairs: LSH bucket ($key) holds $freq conversations > " +
-        s"maxBucketFreq=$maxBucketFreq — a duplicate class this size has " +
-        "quadratic pair output. Use the linear multisetFingerprint keeper " +
-        "window (conv_dedup_fp shape) for exact classes, or raise " +
-        "maxBucketFreq deliberately."
-    }
-    // r8: candidates via [[bucketPairs]] (guard above bounds the arrays);
-    // materialized eagerly — cand feeds the verify join's two probe sides,
-    // and a lazy persist races under AQE's concurrent stage submission
-    val cand = bucketPairs(banded, Seq("band", "band_hash"), "id")
-      .distinct()
-      .persist(lvl)
-    cand.count()
-    val keys = sigs.select(col("id"), col("fp"), col("fp2"), col("n_turns"))
-    val result = cand
-      .join(keys.select(col("id").as("a"), col("fp").as("fp_a"),
-        col("fp2").as("fp2_a"), col("n_turns").as("n_a")), "a")
-      .join(keys.select(col("id").as("b"), col("fp").as("fp_b"),
-        col("fp2").as("fp2_b"), col("n_turns").as("n_b")), "b")
-      .where(col("fp_a") === col("fp_b") && col("fp2_a") === col("fp2_b") &&
-        col("n_a") === col("n_b"))
-      .select("a", "b")
-      .persist(lvl)
-    result.count()
-    sigs.unpersist(); banded.unpersist(); cand.unpersist()
-    result
+    try verifiedPairs("conversationDupPairs",
+        sigs.select(col("id"), bandHashes(sigArr, bands, numHashes / bands)),
+        Seq("band", "band_hash"), "id", maxBucketFreq, (key, freq) =>
+          s"LSH bucket ($key) holds $freq conversations > " +
+            s"maxBucketFreq=$maxBucketFreq — a duplicate class this size has " +
+            "quadratic pair output. Use the linear multisetFingerprint keeper " +
+            "window (conv_dedup_fp shape) for exact classes, or raise " +
+            "maxBucketFreq deliberately.") { (cand, _) =>
+      bothEnds(cand, sigs.select(col("id"), col("fp"), col("fp2"), col("n_turns")), "id")
+        .where(col("fp_a") === col("fp_b") && col("fp2_a") === col("fp2_b") &&
+          col("n_turns_a") === col("n_turns_b"))
+        .select("a", "b")
+    } finally sigs.unpersist()
   }
 
+  /** SimHash near-dup pairs: Hamming(sig_a, sig_b) <= maxDist via
+    * pigeonhole — split the 64-bit signature into (maxDist+1) chunks; pairs
+    * within the distance must share at least one chunk ⇒ join per chunk,
+    * verify distance. Lazy: the returned plan runs when the caller acts on
+    * it.
+    */
   def simhashNearDups(
       docs: DataFrame,
       idCol: String = "doc_id",

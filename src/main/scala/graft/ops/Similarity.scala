@@ -175,40 +175,33 @@ object Similarity {
       idCol: String = "vec_id",
       vecCol: String = "embedding",
       nHint: Long = 0L // approximate corpus size; avoids any count job
-  ): DataFrame = {
-    val (pairs, bands) = candidatePairs(corpus, resolveBits(nHint, bits), tables, dim,
-      idCol, vecCol)
-    // r8: cosine is symmetric and bit-exact under argument swap (the
-    // elementwise products commute; the fold order over indices is the
-    // same), so each unordered candidate pair is scored ONCE (a < b) and
-    // then mirrored in the same scan stage by a 2-element explode — half
-    // the vector-join probes and half the cosine work of scoring both
-    // directions, with no union branch to race. Top-k per query is ONE
-    // aggregation (sorted-array slice) instead of exchange + global sort +
-    // Window: per-group state is the query's candidate list, bounded by
-    // Σ bucket sizes over `tables` tables (~tables·2^ceil(log2 128) ids by
-    // [[resolveBits]] construction). The descending struct sort on
-    // (sim, -n_id, n_id) reproduces `row_number over (sim desc, n_id asc)`
-    // exactly — double total order (NaN greatest, 0.0 > -0.0) matches the
-    // window's desc ordering, and (q, n) rows are unique by construction.
-    val scored = scorePairs(corpus, pairs, idCol, vecCol)
-    val mirrored = scored.select(explode(array(
-        struct(col("q_id"), col("n_id"), col("sim")),
-        struct(col("n_id").as("q_id"), col("q_id").as("n_id"), col("sim")))).as("e"))
-      .select(col("e.q_id").as("q_id"), col("e.n_id").as("n_id"), col("e.sim").as("sim"))
-    val result = mirrored
-      .groupBy("q_id")
-      .agg(slice(sort_array(collect_list(
-          struct(col("sim"), (-col("n_id")).as("nk"), col("n_id"))),
-        asc = false), 1, k).as("top"))
-      .select(col("q_id"), posexplode(col("top")).as(Seq("pos", "t")))
-      .select(col("q_id"), (col("pos") + 1).cast("int").as("rank"),
-        col("t.n_id").as("n_id"), col("t.sim").as("sim"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    result.count()
-    bands.unpersist()
-    result
-  }
+  ): DataFrame =
+    lshPairs("lshTopK", corpus, resolveBits(nHint, bits), tables, dim, idCol, vecCol) { scored =>
+      // r8: cosine is symmetric and bit-exact under argument swap (the
+      // elementwise products commute; the fold order over indices is the
+      // same), so each unordered candidate pair is scored ONCE (a < b) and
+      // then mirrored in the same scan stage by a 2-element explode — half
+      // the vector-join probes and half the cosine work of scoring both
+      // directions, with no union branch to race. Top-k per query is ONE
+      // aggregation (sorted-array slice) instead of exchange + global sort +
+      // Window: per-group state is the query's candidate list, bounded by
+      // Σ bucket sizes over `tables` tables (~tables·2^ceil(log2 128) ids by
+      // [[resolveBits]] construction). The descending struct sort on
+      // (sim, -n_id, n_id) reproduces `row_number over (sim desc, n_id asc)`
+      // exactly — double total order (NaN greatest, 0.0 > -0.0) matches the
+      // window's desc ordering, and (q, n) rows are unique by construction.
+      scored.select(explode(array(
+          struct(col("a").as("q_id"), col("b").as("n_id"), col("sim")),
+          struct(col("b").as("q_id"), col("a").as("n_id"), col("sim")))).as("e"))
+        .select(col("e.q_id").as("q_id"), col("e.n_id").as("n_id"), col("e.sim").as("sim"))
+        .groupBy("q_id")
+        .agg(slice(sort_array(collect_list(
+            struct(col("sim"), (-col("n_id")).as("nk"), col("n_id"))),
+          asc = false), 1, k).as("top"))
+        .select(col("q_id"), posexplode(col("top")).as(Seq("pos", "t")))
+        .select(col("q_id"), (col("pos") + 1).cast("int").as("rank"),
+          col("t.n_id").as("n_id"), col("t.sim").as("sim"))
+    }
 
   /** bits ≈ log2(n / 128): keeps expected bucket size ~128 at any corpus
     * size so candidate-pair work stays near-linear. No ceiling — recall at
@@ -225,10 +218,11 @@ object Similarity {
 
   /** (id, table, bucket) rows across `tables` hash tables — ids ONLY: the
     * vectors (512 B each at dim 64) must not be shuffled ×tables through the
-    * band join; they are re-joined once per side for scoring. All buckets
-    * come from ONE pass over the vector ([[graft.functions.LshBucketsExpr]])
-    * — the per-plane HOF formulation ([[lshBucket]], kept as the spec
-    * reference) evaluated tables×bits interpreted dot products per row.
+    * bucket exchange; they are re-joined once per side for scoring. All
+    * buckets come from ONE pass over the vector
+    * ([[graft.functions.LshBucketsExpr]]) — the per-plane HOF formulation
+    * ([[lshBucket]], kept as the spec reference) evaluated tables×bits
+    * interpreted dot products per row.
     */
   def lshTables(
       corpus: DataFrame,
@@ -239,69 +233,42 @@ object Similarity {
       vecCol: String
   ): DataFrame = {
     val planes = hyperplanes(dim, bits * tables)
-    val base = corpus.select(col(idCol).as("id"),
-      col(vecCol).cast("array<double>").as("vec"))
-    base.select(col("id"),
+    vectors(corpus, idCol, vecCol).select(col("id"),
       posexplode(graft.functions.gf.lshBuckets(col("vec"), planes, bits))
         .as(Seq("table", "bucket")))
   }
 
-  /** Deduped candidate id pairs from multi-table bucket membership, via
-    * one bucket-keyed aggregation ([[graft.ops.Dedup.bucketPairs]]). Only
-    * narrow (id, table, bucket) rows shuffle; pairs and the banded frame
-    * are both returned lazy (callers' `unpersist()` on the banded frame is
-    * a no-op kept for API stability).
+  /** Multi-table sign-LSH candidates through the shared pair kernel
+    * ([[graft.ops.Dedup.verifiedPairs]], unguarded: bucket sizes are ~128
+    * by [[resolveBits]] construction, and any bucket big enough to strain
+    * one collect_list buffer has long since made the Θ(m²) pair OUTPUT
+    * itself infeasible). Each deduped candidate pair (a < b) is scored
+    * once by exact cosine — (a, b, sim) — and handed to `verify`.
     */
-  private def candidatePairs(
+  private def lshPairs(
+      op: String,
       corpus: DataFrame,
       bits: Int,
       tables: Int,
       dim: Int,
       idCol: String,
       vecCol: String
-  ): (DataFrame, DataFrame) = {
-    // r8: candidates via [[graft.ops.Dedup.bucketPairs]] — ONE aggregation
-    // shuffle of the narrow banded frame (singleton buckets pruned before
-    // pair enumeration) replaces the two-sided bucket self-join, and pairs
-    // are emitted ordered (a < b) exactly once — [[lshTopK]] mirrors AFTER
-    // scoring, so the distinct hashes half the rows the old
-    // both-directions join fed it. No persist on the banded frame any
-    // more: with the self-join gone it has ONE consumer (the bucket
-    // aggregation), so caching would only add a materialization pass.
-    // (Guard-free: sign-LSH bucket sizes are ~128 by [[resolveBits]]
-    // construction, and any bucket big enough to strain one collect_list
-    // buffer has long since made the Θ(m²) pair OUTPUT itself infeasible.)
-    // The deduped pair frame stays LAZY — both callers consume it exactly
-    // once (scoring).
-    // the pinned REPARTITION_BY_NUM bucket exchange keeps pair ENUMERATION
-    // at full width (AQE would coalesce the post-agg stage by the tiny
-    // aggregated size, serializing the explode); the aggregation itself
-    // then needs no exchange of its own — same shuffle count
-    val b = lshTables(corpus, bits, tables, dim, idCol, vecCol)
-      .repartition(graft.ops.Dedup.bucketParts(corpus),
-        col("table"), col("bucket"))
-    val pairs = graft.ops.Dedup.bucketPairs(b, Seq("table", "bucket"), "id")
-      .distinct()
-      .select(col("a").as("q_id"), col("b").as("n_id"))
-    (pairs, b)
-  }
+  )(verify: DataFrame => DataFrame): DataFrame =
+    graft.ops.Dedup.verifiedPairs(op, lshTables(corpus, bits, tables, dim, idCol, vecCol),
+      Seq("table", "bucket"), "id") { (cand, _) =>
+      verify(scored(cand, vectors(corpus, idCol, vecCol)))
+    }
 
-  /** Exact cosine for candidate pairs: vectors join back once per side —
-    * the ONLY vector materialization in the LSH path.
+  /** (id, vec) with the vector as `array<double>`. */
+  private def vectors(df: DataFrame, idCol: String, vecCol: String): DataFrame =
+    df.select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("vec"))
+
+  /** Exact cosine for candidate pairs (a, b): vectors join back once per
+    * side — the ONLY vector materialization in the LSH paths.
     */
-  private def scorePairs(
-      corpus: DataFrame,
-      pairs: DataFrame,
-      idCol: String,
-      vecCol: String
-  ): DataFrame = {
-    val vecs = corpus.select(col(idCol).as("id"),
-      col(vecCol).cast("array<double>").as("vec"))
-    pairs
-      .join(vecs.select(col("id").as("q_id"), col("vec").as("q_vec")), "q_id")
-      .join(vecs.select(col("id").as("n_id"), col("vec").as("n_vec")), "n_id")
-      .select(col("q_id"), col("n_id"), cosine(col("q_vec"), col("n_vec")).as("sim"))
-  }
+  private def scored(cand: DataFrame, vecs: DataFrame): DataFrame =
+    graft.ops.Dedup.bothEnds(cand, vecs, "id")
+      .select(col("a"), col("b"), cosine(col("vec_a"), col("vec_b")).as("sim"))
 
   /** Semantic near-duplicate pairs via k-means cluster partitioning — the
     * SemDeDup shape (Abbas et al., "SemDeDup: Data-efficient learning at
@@ -340,54 +307,52 @@ object Similarity {
       subTables: Int = 8,
       seed: Long = 7L
   ): DataFrame = {
-    val assigned = corpus.select(
-      col(idCol).as("id"),
-      col(vecCol).cast("array<double>").as("vec"),
-      element_at(graft.functions.gf.nearestCentroids(
-        col(vecCol).cast("array<double>"), centroids, 1), 1).as("cluster"))
-    def pairsOf(rows: DataFrame, keys: Seq[String]): DataFrame = {
-      val cond = keys.map(c => col(s"l.$c") === col(s"r.$c"))
-        .reduce(_ && _) && col("l.id") < col("r.id")
-      rows.as("l").join(rows.as("r"), cond)
+    val spark = corpus.sparkSession
+    val assigned = vectors(corpus, idCol, vecCol).withColumn("cluster", element_at(
+      graft.functions.gf.nearestCentroids(col("vec"), centroids, 1), 1))
+    // all pairs within a cluster, scored: a cluster-keyed self-join
+    def clusterPairs(rows: DataFrame): DataFrame =
+      rows.as("l").join(rows.as("r"),
+          col("l.cluster") === col("r.cluster") && col("l.id") < col("r.id"))
         .select(col("l.id").as("a"), col("r.id").as("b"),
           cosine(col("l.vec"), col("r.vec")).as("sim"))
-    }
-    if (maxClusterSize <= 0) {
-      val out = pairsOf(assigned, Seq("cluster")).where(col("sim") >= threshold)
+    def eager(pairs: DataFrame): DataFrame = {
+      val out = pairs.where(col("sim") >= threshold)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      out.count() // uniform eager contract: caller owns out.unpersist()
+      graft.obs.JobLabel(spark, "semanticNearDups: result count")(out.count())
       out
-    } else {
+    }
+    if (maxClusterSize <= 0) eager(clusterPairs(assigned))
+    else {
       // ==Hot-cluster sub-split== Candidate work is Σ cluster_size², so one
       // popular template cluster IS the workload at corpus scale. Clusters
       // above `maxClusterSize` are salt-banded WITHIN the cluster by
       // multi-table sign-bit LSH: near-duplicates still collide in some
       // table with high probability (and identical vectors in EVERY table
       // — the exactness the planted-twin oracle pins survives), while the
-      // per-bucket self-join bounds candidate work by occupancy². The bit
-      // width derives from the largest hot cluster (the size aggregation
-      // is k rows — an explicit, documented driver action; `assigned` is
-      // persisted so centroid assignment runs once, released before
-      // return). Residual honesty: a hot cluster of NEAR-IDENTICAL vectors
-      // does not split (same sign on every plane) — but then the true
-      // pair OUTPUT is itself quadratic and no candidate scheme can beat
-      // its own output size; the sub-split bounds the case that matters,
-      // a broad cluster with sparse duplicates.
+      // (cluster, table, bucket) candidates of the shared pair kernel
+      // bound candidate work by occupancy². The bit width derives from the
+      // largest hot cluster (the size aggregation is k rows — an explicit,
+      // documented collect; `assigned` is persisted so centroid
+      // assignment runs once, released before return). Residual honesty: a
+      // hot cluster of NEAR-IDENTICAL vectors does not split (same sign on
+      // every plane) — but then the true pair OUTPUT is itself quadratic
+      // and no candidate scheme can beat its own output size; the
+      // sub-split bounds the case that matters, a broad cluster with
+      // sparse duplicates.
       val acached = assigned.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val sizes = acached.groupBy("cluster").agg(count(lit(1)).as("cn"))
-        .where(col("cn") > maxClusterSize)
-        .collect().map(r => (r.getInt(0), r.getLong(1)))
-      val result =
-        if (sizes.isEmpty) pairsOf(acached, Seq("cluster")).where(col("sim") >= threshold)
+      try {
+        val sizes = graft.obs.JobLabel(spark, "semanticNearDups: cluster sizes")(
+          acached.groupBy("cluster").agg(count(lit(1)).as("cn"))
+            .where(col("cn") > maxClusterSize)
+            .collect().map(r => (r.getInt(0), r.getLong(1))))
+        if (sizes.isEmpty) eager(clusterPairs(acached))
         else {
           val hotIds = sizes.map(_._1).toSeq
-          val maxSz = sizes.map(_._2).max
           val bits = math.max(1, math.ceil(
-            math.log(maxSz.toDouble / maxClusterSize) / math.log(2.0)).toInt)
-          val dim = centroids.head.length
-          val planes = hyperplanes(dim, bits * subTables, seed)
-          val cold = acached.where(!col("cluster").isInCollection(hotIds))
-          // ids ONLY through the band self-join (the lshTables discipline:
+            math.log(sizes.map(_._2).max.toDouble / maxClusterSize) / math.log(2.0)).toInt)
+          val planes = hyperplanes(centroids.head.length, bits * subTables, seed)
+          // ids ONLY through the bucket exchange (the lshTables discipline:
           // vectors must not shuffle ×subTables); candidates dedupe BEFORE
           // scoring so each pair's cosine is computed once, with the
           // vectors joined back from the cached assignment
@@ -395,26 +360,14 @@ object Similarity {
             .select(col("id"), col("cluster"),
               posexplode(graft.functions.gf.lshBuckets(col("vec"), planes, bits))
                 .as(Seq("table", "bucket")))
-          val hotCand = hotBands.as("l").join(hotBands.as("r"),
-              col("l.cluster") === col("r.cluster") &&
-                col("l.table") === col("r.table") &&
-                col("l.bucket") === col("r.bucket") &&
-                col("l.id") < col("r.id"))
-            .select(col("l.id").as("a"), col("r.id").as("b"))
-            .distinct()
-          val vecs = acached.select(col("id"), col("vec"))
-          val hotPairs = hotCand
-            .join(vecs.select(col("id").as("a"), col("vec").as("va")), "a")
-            .join(vecs.select(col("id").as("b"), col("vec").as("vb")), "b")
-            .select(col("a"), col("b"), cosine(col("va"), col("vb")).as("sim"))
-          pairsOf(cold, Seq("cluster"))
-            .union(hotPairs)
-            .where(col("sim") >= threshold)
+          graft.ops.Dedup.verifiedPairs("semanticNearDups", hotBands,
+            Seq("cluster", "table", "bucket"), "id") { (cand, _) =>
+            clusterPairs(acached.where(!col("cluster").isInCollection(hotIds)))
+              .union(scored(cand, acached.select(col("id"), col("vec"))))
+              .where(col("sim") >= threshold)
+          }
         }
-      val out = result.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      out.count() // eager-materialization contract: caller owns out.unpersist()
-      acached.unpersist()
-      out
+      } finally acached.unpersist()
     }
   }
 
@@ -435,15 +388,7 @@ object Similarity {
       idCol: String = "vec_id",
       vecCol: String = "embedding",
       nHint: Long = 0L
-  ): DataFrame = {
-    val (pairs, bands) = candidatePairs(corpus, resolveBits(nHint, bits), tables, dim,
-      idCol, vecCol)
-    val result = scorePairs(corpus, pairs, idCol, vecCol)
-      .where(col("sim") >= threshold)
-      .select(col("q_id").as("a"), col("n_id").as("b"), col("sim"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    result.count()
-    bands.unpersist()
-    result
-  }
+  ): DataFrame =
+    lshPairs("cosineNearDups", corpus, resolveBits(nHint, bits), tables, dim, idCol, vecCol)(
+      _.where(col("sim") >= threshold))
 }

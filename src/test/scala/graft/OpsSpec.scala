@@ -490,22 +490,73 @@ class OpsSpec extends AnyFunSuite {
     isolated.foreach(i => assert(alt(i) == i))
   }
 
+  /** Ids of the RDDs the session holds persisted. */
+  private def persistedRdds: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
   test("dedup/ANN library calls honor the documented eager-materialization contract") {
-    // documented: the returned frame is persisted + already materialized;
-    // the caller owns its unpersist. Assert the storage level is set.
-    val pairs = Dedup.minhashNearDups(planted, threshold = 0.5)
-    assert(pairs.storageLevel.useMemory || pairs.storageLevel.useDisk,
-      "minhashNearDups result must come back persisted per its contract")
-    pairs.unpersist()
-    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-    val knn = Similarity.lshTopK(emb, k = 3, bits = 4, tables = 4)
-    assert(knn.storageLevel.useMemory || knn.storageLevel.useDisk,
-      "lshTopK result must come back persisted per its contract")
-    knn.unpersist()
-    val spans = Dedup.duplicatedWindowSpans(planted, k = 8)
-    assert(spans.storageLevel.useMemory || spans.storageLevel.useDisk,
-      "duplicatedWindowSpans result must come back persisted per its contract")
-    spans.unpersist()
+    // documented: the returned frame is persisted + already materialized,
+    // every intermediate cache is released before returning, and the
+    // caller owns the result's unpersist. The inputs are plans no other
+    // test caches (a cached identical result would be shared, not
+    // created), read after the fixtures' own caches are filled.
+    planted.count()
+    val docsIn = planted.where($"doc_id" >= 0)
+    val embRaw = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    embRaw.count()
+    val emb = embRaw.where($"vec_id" >= 0)
+    val centroids = graft.ops.Ivf.train(emb, k = 4, iters = 1).map(_.toSeq).toSeq
+    val turns = Seq(("a", 0, "hi"), ("a", 1, "bye"), ("b", 0, "hi"), ("b", 1, "bye"),
+      ("c", 0, "other")).toDF("conv_id", "turn_idx", "text")
+    def owned(name: String)(call: => org.apache.spark.sql.DataFrame): Unit = {
+      val before = persistedRdds
+      val out = call
+      assert(out.storageLevel.useMemory || out.storageLevel.useDisk,
+        s"$name result must come back persisted per its contract")
+      val held = persistedRdds -- before
+      assert(held.size == 1, s"$name: persisted RDDs besides its result: $held")
+      out.unpersist()
+      assert((persistedRdds -- before).isEmpty, s"$name: $held still persisted after unpersist")
+    }
+    owned("minhashNearDups")(Dedup.minhashNearDups(docsIn, threshold = 0.5))
+    owned("simhashExactDups")(Dedup.simhashExactDups(docsIn))
+    owned("conversationDupPairs")(Dedup.conversationDupPairs(turns))
+    owned("lshTopK")(Similarity.lshTopK(emb, k = 3, bits = 4, tables = 4))
+    owned("cosineNearDups")(Similarity.cosineNearDups(emb, threshold = 0.5, bits = 4, tables = 4))
+    owned("semanticNearDups")(Similarity.semanticNearDups(emb, centroids, threshold = 0.5))
+    owned("semanticNearDups (sub-split)")(
+      Similarity.semanticNearDups(emb, centroids, threshold = 0.5, maxClusterSize = 10))
+    owned("duplicatedWindowSpans")(Dedup.duplicatedWindowSpans(docsIn, k = 8))
+  }
+
+  test("pair kernel actions carry op: step job labels; caller label restored") {
+    val sc = spark.sparkContext
+    val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .foreach(seen.add)
+    }
+    sc.addSparkListener(listener)
+    sc.setJobDescription("caller")
+    try {
+      Dedup.minhashNearDups(planted, threshold = 0.5).unpersist()
+      val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+      Similarity.lshTopK(emb, k = 3, bits = 4, tables = 4).unpersist()
+      assert(sc.getLocalProperty("spark.job.description") == "caller")
+      val want = Set("minhashNearDups: hot-key guard", "minhashNearDups: candidate count",
+        "minhashNearDups: per-id attribute count", "minhashNearDups: result count",
+        "lshTopK: result count")
+      // the listener bus is asynchronous
+      var waited = 0
+      while (!want.forall(seen.contains) && waited < 100) { Thread.sleep(100); waited += 1 }
+      assert(want.forall(seen.contains), s"seen: $seen")
+      // unguarded: no guard pass, candidates stay lazy
+      assert(!seen.contains("lshTopK: hot-key guard") && !seen.contains("lshTopK: candidate count"),
+        s"seen: $seen")
+    } finally {
+      sc.setJobDescription(null)
+      sc.removeSparkListener(listener)
+    }
   }
 
   test("hyperplane components are Gaussian (moments), deterministic by seed") {
@@ -1225,12 +1276,15 @@ class OpsSpec extends AnyFunSuite {
 
   test("hot-key guards fail loudly and point at the linear keeper forms") {
     val hot = (1L to 6L).map(i => (i, "identical text body here")).toDF("doc_id", "text")
+    val before = persistedRdds
     val e1 = intercept[IllegalStateException](
       Dedup.simhashExactDups(hot, maxSigFreq = 3))
     assert(e1.getMessage.contains("multisetKeepers"), e1.getMessage)
     val e2 = intercept[IllegalStateException](
       Dedup.minhashNearDups(hot, threshold = 1.0, maxBucketFreq = 3))
     assert(e2.getMessage.contains("Keepers"), e2.getMessage)
+    // a refusal releases what the call cached
+    assert(persistedRdds == before, persistedRdds -- before)
     // the keeper forms handle the same corpus linearly
     assert(Dedup.multisetKeepers(hot).where($"is_dup").count() == 5)
     assert(Dedup.shingleSetKeepers(hot).where($"is_dup").count() == 5)
@@ -1252,9 +1306,11 @@ class OpsSpec extends AnyFunSuite {
     // hot-bucket guard: many identical conversations refuse pair emission
     val many = (1 to 8).flatMap(i =>
       Seq((s"x$i", 0, "same"), (s"x$i", 1, "conv"))).toDF("conv_id", "turn_idx", "text")
+    val before = persistedRdds
     val e = intercept[IllegalStateException](
       Dedup.conversationDupPairs(many, maxBucketFreq = 3))
     assert(e.getMessage.contains("multisetFingerprint"), e.getMessage)
+    assert(persistedRdds == before, persistedRdds -- before)
   }
 
   test("fingerprint collision pins: fp-distinctness == key-distinctness on the oracle corpora") {

@@ -105,8 +105,8 @@ class PlanSpec extends AnyFunSuite {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val pm = plan(graft.ops.Dedup.minhashNearDups(docs, threshold = 0.5))
     assert(!pm.contains("CartesianProduct"), pm)
-    // both sides of the banded self-join read the PERSISTED narrow frame —
-    // signatures compute once
+    // the candidate pairs and both verify joins read PERSISTED frames —
+    // signatures and shingles compute once
     assert(pm.contains("InMemoryTableScan"), pm)
     val centroids = graft.ops.Ivf.train(emb, k = 8, iters = 1)
     val pi = plan(graft.ops.Ivf.topK(emb, emb.limit(5), centroids, k = 3, nprobe = 2))

@@ -3,7 +3,11 @@
 outputs against the DuckDB oracles and compare (column-name-sorted, row
 content hash), mimicking the driver.
 
-Usage: python3 tools/check_oracles.py <sfDir> <verifyOutDir>
+Usage: python3 tools/check_oracles.py <sfDir> <verifyOutDir> [query,query,...]
+
+With a comma-separated query list (the same form as Verify's third
+argument) only those names' oracle SQL runs; without one, every oracle in
+<verifyOutDir>/oracle_sql.json runs.
 """
 import json
 import sys
@@ -19,6 +23,12 @@ for t in ["region", "nation", "customer", "supplier", "part", "orders",
 
 oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
 fail = 0
+if len(sys.argv) > 3:
+    wanted = {n.strip() for n in sys.argv[3].split(",") if n.strip()}
+    for name in sorted(wanted - oracle.keys()):
+        print(f"FAIL {name}: no oracle sql")
+        fail += 1
+    oracle = {n: sql for n, sql in oracle.items() if n in wanted}
 for name, sql in sorted(oracle.items()):
     try:
         want = con.execute(sql).fetchdf()
