@@ -67,39 +67,168 @@ object Detectors {
   ): Array[SpanEnt] = {
     val off = new CpOffsets(text)
     val out = new scala.collection.mutable.ArrayBuffer[SpanEnt](8)
-    // one pass: any CJK char, and the longest run of `\d` code points
-    var hasCjk = false
-    var digitRun = 0
-    var run = 0
-    var i = 0
-    while (i < text.length) {
-      val c = text.charAt(i)
-      if (c >= '一' && c <= '鿿') hasCjk = true
-      val cp = if (Character.isHighSurrogate(c)) text.codePointAt(i) else c.toInt
-      if (if (cp < 128) cp >= '0' && cp <= '9' else Character.isDigit(cp)) {
-        run += 1
-        if (run > digitRun) digitRun = run
-      } else run = 0
-      i += Character.charCount(cp)
-    }
+    val cand = candidates.get()
+    cand.index(text)
     var r = 0
     while (r < rules.length) {
       val rule = rules(r)
-      // guards: a match provably contains one of these literals, and a digit
-      // run of `minDigitRun`; skip the backtracking matcher when the text
-      // lacks them (semantics unchanged)
-      val runnable =
-        if (rule.cjkGuards && !hasCjk) false
-        else if (rule.minDigitRun > digitRun) false
-        else rule.guards.isEmpty || rule.guards.exists(text.contains)
-      if (runnable) {
-        val m = rule.matcher(text)
-        while (m.find()) {
-          out += SpanEnt(off.toCp(m.start), off.toCp(m.end), rule.typ, 1.0, source)
-        }
+      rule.anchor match {
+        case None =>
+          val m = rule.matcher(text)
+          while (m.find())
+            out += SpanEnt(off.toCp(m.start), off.toCp(m.end), rule.typ, 1.0, source)
+        case Some(anchor) =>
+          cand.windows(anchor)
+          // `find()`'s loop restricted to the windows: positions in
+          // increasing order, the next search at or after the last match's
+          // end, no start inside a surrogate pair (`Pattern$StartS` steps
+          // over it)
+          val m = if (cand.nWin > 0) rule.matcher(text) else null
+          var next = 0
+          var w = 0
+          while (w < cand.nWin) {
+            var p = math.max(cand.win(2 * w), next)
+            val hi = cand.win(2 * w + 1)
+            while (p <= hi) {
+              if (p > 0 && Character.isLowSurrogate(text.charAt(p)) &&
+                  Character.isHighSurrogate(text.charAt(p - 1))) p += 1
+              else if (m.region(p, text.length).lookingAt()) {
+                out += SpanEnt(off.toCp(m.start), off.toCp(m.end), rule.typ, 1.0, source)
+                p = if (m.end == m.start) m.end + 1 else m.end
+              } else p += 1
+            }
+            next = p
+            w += 1
+          }
       }
       r += 1
     }
     out.toArray
   }
+
+  /** Candidate match starts of one text, per anchor. [[index]] makes the
+    * one pass over the text, recording its maximal runs of `\d` code
+    * points; [[windows]] then fills `win` with `nWin` inclusive UTF-16
+    * `(lo, hi)` windows, ordered by `lo`. One instance per thread.
+    */
+  private final class Candidates {
+    private var text: String = ""
+    // maximal digit runs: start, end (UTF-16) and length in code points
+    private var runs = new Array[Int](24)
+    private var nRuns = 0
+    var win = new Array[Int](32)
+    var nWin = 0
+
+    def index(t: String): Unit = {
+      text = t
+      nRuns = 0
+      var run = 0
+      var runStart = 0
+      var i = 0
+      while (i < t.length) {
+        val c = t.charAt(i)
+        val cp = if (Character.isHighSurrogate(c)) t.codePointAt(i) else c.toInt
+        if (if (cp < 128) cp >= '0' && cp <= '9' else Character.isDigit(cp)) {
+          if (run == 0) runStart = i
+          run += 1
+        } else if (run > 0) {
+          addRun(runStart, i, run)
+          run = 0
+        }
+        i += Character.charCount(cp)
+      }
+      if (run > 0) addRun(runStart, i, run)
+    }
+
+    private def addRun(start: Int, end: Int, cps: Int): Unit = {
+      if (3 * nRuns + 3 > runs.length) runs = java.util.Arrays.copyOf(runs, 2 * runs.length)
+      runs(3 * nRuns) = start
+      runs(3 * nRuns + 1) = end
+      runs(3 * nRuns + 2) = cps
+      nRuns += 1
+    }
+
+    def windows(anchor: RegexRules.Anchor): Unit = {
+      import RegexRules.Anchor._
+      nWin = 0
+      anchor match {
+        case At(literals @ _*)            => literalWindows(literals, 0)
+        case Before(maxCp, literals @ _*) => literalWindows(literals, maxCp)
+        case RunTo(literal, inRun) =>
+          var q = text.indexOf(literal.toInt)
+          while (q >= 0) {
+            var lo = q
+            while (lo > 0 && inRun(Character.codePointBefore(text, lo)))
+              lo -= Character.charCount(Character.codePointBefore(text, lo))
+            if (lo < q) add(lo, q - 1)
+            q = text.indexOf(literal.toInt, q + 1)
+          }
+        case Digits(n, before) =>
+          var k = 0
+          while (k < nRuns) {
+            // a supplementary digit is two UTF-16 units, so `end - n` is at
+            // or after the last start with n code points left
+            if (runs(3 * k + 2) >= n) add(back(runs(3 * k), before), runs(3 * k + 1) - n)
+            k += 1
+          }
+      }
+    }
+
+    /** `[q, q]` (`maxCp` 0) or `[maxCp code points before q, q - 1]` for
+      * every occurrence `q` of every literal.
+      */
+    private def literalWindows(literals: Seq[String], maxCp: Int): Unit = {
+      var l = 0
+      while (l < literals.length) {
+        val lit = literals(l)
+        var q = text.indexOf(lit)
+        while (q >= 0) {
+          if (maxCp == 0) add(q, q) else if (q > 0) add(back(q, maxCp), q - 1)
+          q = text.indexOf(lit, q + 1)
+        }
+        l += 1
+      }
+      if (literals.length > 1) sortByLo()
+    }
+
+    /** The position `cps` code points before `i`, or 0. */
+    private def back(i: Int, cps: Int): Int = {
+      var j = i
+      var k = 0
+      while (k < cps && j > 0) {
+        j -= 1
+        if (j > 0 && Character.isLowSurrogate(text.charAt(j)) &&
+            Character.isHighSurrogate(text.charAt(j - 1))) j -= 1
+        k += 1
+      }
+      j
+    }
+
+    private def add(lo: Int, hi: Int): Unit = {
+      if (2 * nWin + 2 > win.length) win = java.util.Arrays.copyOf(win, 2 * win.length)
+      win(2 * nWin) = lo
+      win(2 * nWin + 1) = hi
+      nWin += 1
+    }
+
+    // insertion sort: a text holds few occurrences
+    private def sortByLo(): Unit = {
+      var i = 1
+      while (i < nWin) {
+        val lo = win(2 * i)
+        val hi = win(2 * i + 1)
+        var j = i - 1
+        while (j >= 0 && win(2 * j) > lo) {
+          win(2 * j + 2) = win(2 * j)
+          win(2 * j + 3) = win(2 * j + 1)
+          j -= 1
+        }
+        win(2 * j + 2) = lo
+        win(2 * j + 3) = hi
+        i += 1
+      }
+    }
+  }
+
+  private val candidates: ThreadLocal[Candidates] = ThreadLocal.withInitial(() => new Candidates)
 }

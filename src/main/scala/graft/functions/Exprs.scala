@@ -6,7 +6,7 @@ import graft.model.{DeidEvent, Entity, SpanEnt}
 import graft.pipeline.DeidCore
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -67,19 +67,60 @@ object GraftSchemas {
     StructField("end", IntegerType, nullable = false)
   ))
 
+  /** The UTF-8 encodings of the constant strings of detector and deid
+    * rows — rule types, sources and languages — made once, not per row.
+    */
+  private val constantUtf8: java.util.HashMap[String, UTF8String] = {
+    import graft.detect.RegexRules
+    val constants = (RegexRules.zh ++ RegexRules.en ++ RegexRules.stub).map(_.typ) ++
+      RegexRules.entityPriority.keys ++ Seq("regex", "regex_stub", "zh", "en")
+    val m = new java.util.HashMap[String, UTF8String]()
+    constants.foreach(c => m.put(c, UTF8String.fromString(c)))
+    m
+  }
+
+  /** `UTF8String.fromString(s)`, shared for the constant strings. */
+  def utf8(s: String): UTF8String = {
+    val u = constantUtf8.get(s)
+    if (u != null) u else UTF8String.fromString(s)
+  }
+
   def spanEntRow(e: SpanEnt): InternalRow =
-    InternalRow(e.start, e.end, UTF8String.fromString(e.typ), e.score,
-      UTF8String.fromString(e.source))
+    new GenericInternalRow(Array[Any](e.start, e.end, utf8(e.typ), e.score, utf8(e.source)))
 
   def entityRow(e: Entity): InternalRow =
-    InternalRow(UTF8String.fromString(e.typ), e.confidence, e.score,
-      UTF8String.fromString(e.source), UTF8String.fromString(e.language),
-      e.start, e.end, UTF8String.fromString(e.text))
+    new GenericInternalRow(Array[Any](utf8(e.typ), e.confidence, e.score,
+      utf8(e.source), utf8(e.language), e.start, e.end, UTF8String.fromString(e.text)))
 
   def eventRow(e: DeidEvent): InternalRow =
-    InternalRow(UTF8String.fromString(e.entity_type), UTF8String.fromString(e.original),
-      UTF8String.fromString(e.replacement), e.start, e.end,
-      UTF8String.fromString(e.source))
+    new GenericInternalRow(Array[Any](utf8(e.entity_type), UTF8String.fromString(e.original),
+      UTF8String.fromString(e.replacement), e.start, e.end, utf8(e.source)))
+
+  /** `array<row(x)>` over `xs` in order. */
+  def rowArray[T](xs: List[T], row: T => InternalRow): GenericArrayData = {
+    val a = new Array[Any](xs.length)
+    var rest = xs
+    var i = 0
+    while (rest.nonEmpty) {
+      a(i) = row(rest.head)
+      rest = rest.tail
+      i += 1
+    }
+    new GenericArrayData(a)
+  }
+
+  /** A `map<string,string>` with `m`'s entries in its iteration order. */
+  def stringMap(m: Map[String, String]): ArrayBasedMapData = {
+    val keys = new Array[Any](m.size)
+    val values = new Array[Any](m.size)
+    var i = 0
+    m.foreach { case (k, v) =>
+      keys(i) = UTF8String.fromString(k)
+      values(i) = UTF8String.fromString(v)
+      i += 1
+    }
+    new ArrayBasedMapData(new GenericArrayData(keys), new GenericArrayData(values))
+  }
 
   /** Engine whitespace-tokenizer — compiled once per JVM, shared by the
     * tokenizing expressions (a per-row Pattern.compile in a hot eval path
@@ -158,15 +199,12 @@ case class DeidTurnExpr(
       if (extractHtml && HtmlExtract.looksLikeHtml(raw)) HtmlExtract.getText(raw)
       else raw
     val r = DeidCore.process(text, mode, lang, withStub)
-    InternalRow(
+    new GenericInternalRow(Array[Any](
       UTF8String.fromString(r.text),
-      new GenericArrayData(r.entities.map(GraftSchemas.entityRow).toArray),
-      new GenericArrayData(r.events.map(GraftSchemas.eventRow).toArray),
-      ArrayBasedMapData(
-        r.replacementMap.keys.map(UTF8String.fromString).toArray,
-        r.replacementMap.values.map(UTF8String.fromString).toArray
-      )
-    )
+      GraftSchemas.rowArray(r.entities, GraftSchemas.entityRow),
+      GraftSchemas.rowArray(r.events, GraftSchemas.eventRow),
+      GraftSchemas.stringMap(r.replacementMap)
+    ))
   }
 
   override protected def withNewChildInternal(newChild: Expression): DeidTurnExpr =

@@ -36,16 +36,50 @@ object FakeProvider {
     fallbackGenerate(entityType, stableKey, seed, isTw)
   }
 
-  /** `_fallback_generate` (`fake_provider.py:104-168`). Call order of the
-    * RNG draws is load-bearing — do not reorder.
+  /** [[generateDeterministic]] of `n` keys `(types(k), originals(k))`. The
+    * keys' MT19937 states are seeded two at a time
+    * ([[PyRandom.threadLocalPair]]), an odd last key alone; each value is
+    * drawn from its own key's state, so every value equals
+    * `generateDeterministic` of its key.
     */
+  def generateAll(
+      types: Array[String],
+      originals: Array[String],
+      n: Int,
+      contextHash: String,
+      isTw: Boolean
+  ): Array[String] = {
+    val out = new Array[String](n)
+    var k = 0
+    while (k + 1 < n) {
+      val keyA = s"${types(k)}:${originals(k)}:$contextHash"
+      val keyB = s"${types(k + 1)}:${originals(k + 1)}:$contextHash"
+      val (a, b) = PyRandom.threadLocalPair(Digests.seedOf(keyA), Digests.seedOf(keyB))
+      out(k) = draw(types(k), keyA, a, isTw)
+      out(k + 1) = draw(types(k + 1), keyB, b, isTw)
+      k += 2
+    }
+    if (k < n) out(k) = generateDeterministic(types(k), originals(k), contextHash, isTw)
+    out
+  }
+
+  /** `_fallback_generate` (`fake_provider.py:104-168`). */
   def fallbackGenerate(
       entityType: String,
       stableKey: String,
       seed: Long,
       isTw: Boolean
-  ): String = {
-    val rng = PyRandom.threadLocal(seed)
+  ): String = draw(entityType, stableKey, PyRandom.threadLocal(seed), isTw)
+
+  /** `_fallback_generate`'s draws from `rng`, already seeded with the key's
+    * seed. Call order of the RNG draws is load-bearing — do not reorder.
+    */
+  private def draw(
+      entityType: String,
+      stableKey: String,
+      rng: PyRandom,
+      isTw: Boolean
+  ): String =
     entityType match {
       case "ID" | "TW_ID" =>
         if (isTw) {
@@ -86,7 +120,6 @@ object FakeProvider {
       case _ =>
         placeholder(entityType, stableKey)
     }
-  }
 
   /** `_placeholder` (`fake_provider.py:170-173`). */
   def placeholder(entityType: String, stableKey: String): String =

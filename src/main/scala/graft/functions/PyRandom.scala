@@ -23,6 +23,11 @@ package graft.functions
   * `kk` already hold this round's values and words above it the previous
   * round's, which is the array state CPython's eager loop reads at step
   * `kk`. A sequence of fewer than 20 draws thus twists fewer than 20 words.
+  *
+  * Seeding is about 1,250 dependent multiply-add steps. Two seeds run
+  * together through [[PyRandom.threadLocalPair]], whose one loop carries
+  * both `init_by_array` chains: they do not depend on each other, so the
+  * CPU overlaps them.
   */
 final class PyRandom(seed: Long) {
   import PyRandom.{M, N}
@@ -38,17 +43,19 @@ final class PyRandom(seed: Long) {
     */
   def reseed(seed: Long): Unit = {
     // init_genrand(19650218) then init_by_array([seed & 0xffffffff]); with a
-    // one-word key `init_key[j] + j` is always `key + 0`. Each loop's
-    // wrap-around (`mt[0] = mt[N-1]; i = 1`) is unrolled after it; its write
-    // to mt[0] is dead, since mt[0] is read only as the previous word, which
-    // `prev` holds, and is set to 0x80000000 at the end
+    // one-word key `init_key[j] + j` is always `key + 0`. The first loop
+    // reads each word of the init_genrand state once, before writing it, so
+    // it reads the precomputed state directly. Each loop's wrap-around
+    // (`mt[0] = mt[N-1]; i = 1`) is unrolled after it; its write to mt[0] is
+    // dead, since mt[0] is read only as the previous word, which `prev`
+    // holds, and is set to 0x80000000 at the end
+    val g = PyRandom.genrand19650218
     val mt = this.mt
-    System.arraycopy(PyRandom.genrand19650218, 0, mt, 0, N)
     val key = (seed & 0xffffffffL).toInt
-    var prev = mt(0)
+    var prev = g(0)
     var i = 1
     while (i < N) { // first loop: N steps, i = 1 .. N-1 then 1
-      prev = (mt(i) ^ ((prev ^ (prev >>> 30)) * 1664525)) + key
+      prev = (g(i) ^ ((prev ^ (prev >>> 30)) * 1664525)) + key
       mt(i) = prev
       i += 1
     }
@@ -166,11 +173,64 @@ object PyRandom {
 
   private val tl: ThreadLocal[PyRandom] =
     ThreadLocal.withInitial(() => new PyRandom(0L))
+  private val tl2: ThreadLocal[PyRandom] =
+    ThreadLocal.withInitial(() => new PyRandom(0L))
 
   /** Per-thread reusable instance, reseeded for the caller. */
   def threadLocal(seed: Long): PyRandom = {
     val r = tl.get()
     r.reseed(seed)
     r
+  }
+
+  /** The thread's two reusable instances, seeded with `seedA` and `seedB`:
+    * each equals a fresh `PyRandom` of its seed. The first is the instance
+    * [[threadLocal]] returns.
+    */
+  def threadLocalPair(seedA: Long, seedB: Long): (PyRandom, PyRandom) = {
+    val a = tl.get()
+    val b = tl2.get()
+    seedPair(a, seedA, b, seedB)
+    (a, b)
+  }
+
+  /** [[PyRandom.reseed]] of `a` and `b` in one loop, the two chains'
+    * steps interleaved.
+    */
+  private def seedPair(a: PyRandom, seedA: Long, b: PyRandom, seedB: Long): Unit = {
+    val g = genrand19650218
+    val ma = a.mt
+    val mb = b.mt
+    val ka = (seedA & 0xffffffffL).toInt
+    val kb = (seedB & 0xffffffffL).toInt
+    var pa = g(0)
+    var pb = g(0)
+    var i = 1
+    while (i < N) {
+      val gi = g(i)
+      pa = (gi ^ ((pa ^ (pa >>> 30)) * 1664525)) + ka
+      pb = (gi ^ ((pb ^ (pb >>> 30)) * 1664525)) + kb
+      ma(i) = pa
+      mb(i) = pb
+      i += 1
+    }
+    pa = (ma(1) ^ ((pa ^ (pa >>> 30)) * 1664525)) + ka
+    pb = (mb(1) ^ ((pb ^ (pb >>> 30)) * 1664525)) + kb
+    ma(1) = pa
+    mb(1) = pb
+    i = 2
+    while (i < N) {
+      pa = (ma(i) ^ ((pa ^ (pa >>> 30)) * 1566083941)) - i
+      pb = (mb(i) ^ ((pb ^ (pb >>> 30)) * 1566083941)) - i
+      ma(i) = pa
+      mb(i) = pb
+      i += 1
+    }
+    ma(1) = (ma(1) ^ ((pa ^ (pa >>> 30)) * 1566083941)) - 1
+    mb(1) = (mb(1) ^ ((pb ^ (pb >>> 30)) * 1566083941)) - 1
+    ma(0) = 0x80000000
+    mb(0) = 0x80000000
+    a.mti = N
+    b.mti = N
   }
 }

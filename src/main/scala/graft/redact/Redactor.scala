@@ -43,25 +43,32 @@ object Redactor {
     val off = new CpOffsets(text)
     // Per-document memo keyed `type:original` — the reference's LRU cache
     // semantics within one document (`replace/cache.py`, key includes the
-    // ctx hash, constant here): dense repeated PII generates once.
-    val memo = new java.util.HashMap[String, String]()
+    // ctx hash, constant here): dense repeated PII generates once. The
+    // distinct keys are collected first so their MT19937 states can be
+    // seeded two at a time
+    val slots = new java.util.HashMap[String, Integer]()
     val n = sortedDesc.length
     val originals = new Array[String](n)
-    val replacements = new Array[String](n)
+    val slotOf = new Array[Int](n)
+    val types = new Array[String](n)
+    val distinct = new Array[String](n)
+    var d = 0
     var i = 0
     while (i < n) {
       val ent = sortedDesc(i)
       val original = off.slice(ent.start, ent.end)
       originals(i) = original
-      val key = s"${ent.typ}:$original"
-      var repl = memo.get(key)
-      if (repl == null) {
-        repl = FakeProvider.generateDeterministic(ent.typ, original, ctx, isTw)
-        memo.put(key, repl)
-      }
-      replacements(i) = repl
+      val slot = slots.putIfAbsent(s"${ent.typ}:$original", d)
+      if (slot == null) {
+        types(d) = ent.typ
+        distinct(d) = original
+        slotOf(i) = d
+        d += 1
+      } else slotOf(i) = slot
       i += 1
     }
+    val values = FakeProvider.generateAll(types, distinct, d, ctx, isTw)
+    val replacements = slotOf.map(values(_))
     val result = spliceAll(text, off, sortedDesc.map(e => (e.start, e.end)), replacements)
     val events = List.newBuilder[RawEvent]
     i = 0

@@ -1,6 +1,10 @@
 package graft
 
 import graft.detect.{CpOffsets, Detectors, RegexRules, Resolver}
+import graft.detect.RegexRules.Anchor
+import graft.detect.RegexRules.Anchor.{Before, Digits}
+import java.util.regex.Pattern
+import graft.functions.FakeProvider
 import graft.model.SpanEnt
 import graft.pipeline.DeidCore
 import graft.redact.Redactor
@@ -14,7 +18,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - replacement is deterministic;
   *  - the single-pass splice fast path ≡ the exact Python-emulation path
   *    on arbitrary (incl. overlapping) span sets;
-  *  - the guarded regex scan ≡ running every rule's pattern.
+  *  - the anchored regex scan ≡ running every rule's pattern with `find`.
   */
 class PropertySpec extends AnyFunSuite {
 
@@ -110,6 +114,24 @@ class PropertySpec extends AnyFunSuite {
     })
   }
 
+  test("generateAll (keys seeded in pairs) == generateDeterministic per key") {
+    val keyGen = for {
+      typ <- Gen.oneOf("ID", "PHONE", "EMAIL", "ADDRESS", "PASSPORT", "UNIFIED_BUSINESS_NO",
+        "MEDICAL_ID", "NAME", "CONTRACT_NO", "T")
+      original <- Gen.alphaNumStr
+    } yield (typ, original)
+    val caseGen = for {
+      n <- Gen.choose(0, 7)
+      keys <- Gen.listOfN(n, keyGen)
+      isTw <- Gen.oneOf(true, false)
+    } yield (keys, isTw)
+    check(Prop.forAll(caseGen) { case (keys, isTw) =>
+      val got = FakeProvider.generateAll(keys.map(_._1).toArray, keys.map(_._2).toArray,
+        keys.length, "ctx", isTw)
+      got.toSeq == keys.map { case (t, o) => FakeProvider.generateDeterministic(t, o, "ctx", isTw) }
+    })
+  }
+
   // `\d` under UNICODE_CHARACTER_CLASS: ASCII, Arabic-Indic, Devanagari and a
   // supplementary Nd digit (U+1D7CE MATHEMATICAL BOLD DIGIT ZERO)
   private val digitGen: Gen[String] = Gen.oneOf(
@@ -117,37 +139,136 @@ class PropertySpec extends AnyFunSuite {
     Gen.choose('\u0660', '\u0669').map(_.toString),
     Gen.choose('\u0966', '\u096f').map(_.toString),
     Gen.const(new String(Character.toChars(0x1d7ce))))
+  private val anchors: Seq[Anchor] =
+    (RegexRules.zh ++ RegexRules.en ++ RegexRules.stub).flatMap(_.anchor)
+  // digit runs one short of and exactly at each Digits anchor's length
   private val runLengths: Seq[Int] =
-    (RegexRules.zh ++ RegexRules.en).map(_.minDigitRun).filter(_ > 0)
-      .flatMap(n => Seq(n - 1, n)).distinct
-  private val digitRunGen: Gen[String] = for {
-    n <- Gen.oneOf(runLengths)
+    anchors.collect { case Digits(n, _) => Seq(n - 1, n) }.flatten.filter(_ > 0).distinct
+  private def digitRun(lengths: Seq[Int]): Gen[String] = for {
+    n <- Gen.oneOf(lengths)
     ds <- Gen.listOfN(n, digitGen)
   } yield ds.mkString
+  // U+1F600 (So, not `\w`) and U+20000 (Lo, `\w`): surrogate pairs
+  private val supplementary: Seq[String] =
+    Seq(0x1f600, 0x20000).map(cp => new String(Character.toChars(cp)))
+  // `[^\n，；。]` runs around the `{1,30}` bound and each Before distance
+  private val gapLengths: Seq[Int] = (Seq(29, 30, 31) ++
+    anchors.collect { case Before(d, _*) => Seq(d - 1, d, d + 1) }.flatten).distinct
+  private def gap(lengths: Seq[Int]): Gen[String] = for {
+    n <- Gen.oneOf(lengths)
+    cs <- Gen.listOfN(n, Gen.oneOf(Seq("x", "語", " ", "-", "7") ++ supplementary))
+  } yield cs.mkString
+  // a long `[\w.-]` run (letters, digits, `_`, a combining mark, a joiner,
+  // a supplementary letter) ending at `@`
+  private val wordRunGen: Gen[String] = for {
+    n <- Gen.choose(20, 60)
+    cs <- Gen.listOfN(n, Gen.oneOf("a", "Z", "7", "_", ".", "-", "語", "\u0301", "\u200d",
+      supplementary(1)))
+    tail <- Gen.oneOf("@", "@ex.com", "@b.c0.de")
+  } yield cs.mkString + tail
+  // the zh address shapes, with bounds one under, at and over their limits
+  private val addressGen: Gen[String] = Gen.oneOf(
+    for {
+      a <- gap(Seq(1, 29, 30, 31)); v <- Gen.oneOf("村", "里"); b <- gap(Seq(1, 19, 20, 21))
+      d <- digitRun(Seq(1, 2))
+    } yield s"$a$v${b}鄰${d}號",
+    for {
+      a <- gap(Seq(1, 29, 30, 31)); lit <- Gen.oneOf("大樓", "商業大樓", "社區", "大廈")
+      b <- gap(Seq(0, 1, 30))
+    } yield a + lit + b,
+    for {
+      a <- digitRun(Seq(2, 3, 4, 5)); b <- digitRun(Seq(1, 3, 4)); c <- digitRun(Seq(1, 3))
+    } yield s"${a}巷${b}弄${c}號",
+    for { d <- digitRun(Seq(1, 3)); t <- Gen.oneOf("樓", "樓之2", "樓之12") } yield d + t)
+  // the en shapes, each with its longest prefix before the digit run its
+  // anchor keys on
+  private val enGen: Gen[String] = {
+    val sep = Gen.oneOf("", "-", ".", " ")
+    Gen.oneOf(
+      for {
+        pre <- Gen.oneOf("", "+1", "+1-", "1", "1 ", "x+1-", "x+1 ")
+        a <- Gen.oneOf("", "("); b <- Gen.oneOf("", ")")
+        d3 <- digitRun(Seq(3)); s1 <- sep; e3 <- digitRun(Seq(3)); s2 <- sep
+        d4 <- digitRun(Seq(4, 5))
+      } yield s"$pre$a$d3$b$s1$e3$s2$d4",
+      for {
+        l <- Gen.alphaChar; d1 <- Gen.choose('1', '9'); d2 <- digitRun(Seq(1))
+        sp <- Gen.oneOf("", " "); d4 <- digitRun(Seq(4)); d5 <- Gen.choose('0', '9')
+      } yield s"$l$d1$d2$sp$d4$d5",
+      for { a <- digitRun(Seq(3)); b <- digitRun(Seq(2)); c <- digitRun(Seq(4, 5)) }
+        yield s"$a-$b-$c",
+      for { a <- digitRun(Seq(2)); b <- digitRun(Seq(6, 7)) } yield s"$a-$b",
+      for { d <- digitRun(Seq(1, 3)); w <- Gen.oneOf("Main", "Oak"); t <- Gen.oneOf("St", "Ave") }
+        yield s"$d $w $t")
+  }
   private val scanTextGen: Gen[String] = for {
     n <- Gen.choose(0, 10)
     parts <- Gen.listOfN(n, Gen.frequency(
-      4 -> digitRunGen,
+      4 -> digitRun(runLengths),
       2 -> digitGen,
       3 -> Gen.alphaChar.map(_.toString),
-      1 -> Gen.oneOf("ſ", "\u212a", "@", "-", " ", ".", "台北市", "信義路", "路",
-        "巷", "弄", "號", "樓", "鄰", "大樓", "09", "St")))
+      1 -> Gen.listOfN(2, Gen.alphaUpperChar).map(_.mkString),
+      2 -> Gen.oneOf(supplementary),
+      1 -> gap(gapLengths),
+      1 -> wordRunGen,
+      2 -> addressGen,
+      2 -> enGen,
+      3 -> Gen.oneOf("ſ", "\u212a", "@", "-", " ", ".", "(", ")", "+1", "台北市", "信義路",
+        "路", "巷", "弄", "號", "樓", "鄰", "村", "大樓", "商業大樓", "，", "\n", "09", "St")))
   } yield parts.mkString
 
-  test("guarded regex scan == running every rule's pattern unconditionally") {
-    def unguarded(text: String, rules: IndexedSeq[RegexRules.Rule]): Seq[SpanEnt] = {
-      val off = new CpOffsets(text)
-      rules.flatMap { rule =>
-        val m = rule.pattern.matcher(text)
-        Iterator.continually(m).takeWhile(_.find())
-          .map(m => SpanEnt(off.toCp(m.start), off.toCp(m.end), rule.typ, 1.0, "regex"))
-          .toList
-      }
+  /** Every rule's pattern over the whole text with `while (m.find())`. */
+  private def unanchored(
+      text: String,
+      rules: IndexedSeq[RegexRules.Rule],
+      source: String
+  ): Seq[SpanEnt] = {
+    val off = new CpOffsets(text)
+    rules.flatMap { rule =>
+      val m = rule.pattern.matcher(text)
+      Iterator.continually(m).takeWhile(_.find())
+        .map(m => SpanEnt(off.toCp(m.start), off.toCp(m.end), rule.typ, 1.0, source))
+        .toList
     }
-    check(Prop.forAll(scanTextGen) { text =>
+  }
+
+  test("anchored regex scan == every rule's pattern unconditionally (zh, en, stub)") {
+    def same(text: String): Boolean =
       Seq("zh", "en").forall { lang =>
-        Detectors.regexDetect(text, lang).toSeq == unguarded(text, RegexRules.forLang(lang))
+        Detectors.regexDetect(text, lang).toSeq ==
+          unanchored(text, RegexRules.forLang(lang), "regex")
+      } && Detectors.stubDetect(text).toSeq == unanchored(text, RegexRules.stub, "regex_stub")
+    // each match starting as far before its anchor as the pattern allows
+    val farthest = Seq("x+1-(555)-555-1234", "AB123456", "a12 34567", "123-45-6789",
+      "12-3456789", "A123456789", "M1234567", "12345678", "1234巷5弄6號", "x" * 30 + "商業大樓",
+      "x" * 30 + "村" + "y" * 20 + "鄰1號", "a.b_c@d.com", "12樓之3", "0912-345-678")
+    farthest.foreach(t => assert(same(t), t))
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(2000),
+      Prop.forAll(scanTextGen)(same))
+    assert(res.passed, res.status.toString)
+  }
+
+  test("RunTo classes equal their regex classes on every code point") {
+    for ((cls, inRun) <- Seq("[\\w.-]" -> Anchor.wordDotDash, "\\d" -> Anchor.digit)) {
+      val m = Pattern.compile(cls, Pattern.UNICODE_CHARACTER_CLASS).matcher("")
+      val differ = (0 to Character.MAX_CODE_POINT).filter { cp =>
+        m.reset(new String(Character.toChars(cp))).matches() != inRun(cp)
       }
-    })
+      assert(differ.isEmpty, s"$cls: ${differ.take(5).map(Integer.toHexString)}")
+    }
+  }
+
+  test("anchored scan never starts inside a surrogate pair, as find does") {
+    // `\p{Cs}` matches a lone surrogate only: find never tries the low half
+    // of a pair, so these rules match nothing in "😀鄰" or "😀😀1"
+    val rules = IndexedSeq(
+      RegexRules.Rule("CS", Pattern.compile("\\p{Cs}鄰", Pattern.UNICODE_CHARACTER_CLASS),
+        Some(Before(1, "鄰"))),
+      RegexRules.Rule("CS", Pattern.compile("\\p{Cs}\\p{Cs}?\\d",
+        Pattern.UNICODE_CHARACTER_CLASS), Some(Digits(1, 2))))
+    val smile = supplementary.head
+    for (text <- Seq(smile + "鄰", smile + smile + "1", "a" + smile + "鄰1")) {
+      assert(Detectors.regexDetect(text, rules).toSeq == unanchored(text, rules, "regex"), text)
+    }
   }
 }

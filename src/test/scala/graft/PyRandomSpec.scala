@@ -55,6 +55,28 @@ class PyRandomSpec extends AnyFunSuite {
     assert(got == Seq.fill(30)(fresh.getrandbits(32)))
   }
 
+  test("threadLocalPair seeds both instances like two fresh instances") {
+    val rnd = new scala.util.Random(20261019L)
+    val seeds = Seq(0L, 1L, 12345L, 0xffffffffL) ++ Seq.fill(6)(rnd.nextLong() & 0xffffffffL)
+    for (a <- seeds; b <- seeds) {
+      val (ra, rb) = PyRandom.threadLocalPair(a, b)
+      assert(ra ne rb)
+      // 1,300 draws each pass the first and second 624-word twists
+      val drawsA = Seq.fill(1300)(ra.getrandbits(32))
+      val drawsB = Seq.fill(1300)(rb.getrandbits(32))
+      val freshA = new PyRandom(a)
+      val freshB = new PyRandom(b)
+      assert(drawsA == Seq.fill(1300)(freshA.getrandbits(32)), s"seed pair ($a, $b), first")
+      assert(drawsB == Seq.fill(1300)(freshB.getrandbits(32)), s"seed pair ($a, $b), second")
+    }
+    // the pair's first instance is the thread's single instance; reseeding
+    // it alone leaves the second one's stream where it was
+    val (ra, rb) = PyRandom.threadLocalPair(7L, 8L)
+    assert(PyRandom.threadLocal(12345L) eq ra)
+    val fresh8 = new PyRandom(8L)
+    assert(Seq.fill(5)(rb.getrandbits(32)) == Seq.fill(5)(fresh8.getrandbits(32)))
+  }
+
   test("randint matches CPython") {
     val r = new PyRandom(1L)
     assert(Seq.fill(10)(r.randint(0, 9)) == Seq(2, 9, 1, 4, 1, 7, 7, 7, 6, 3))
