@@ -11,8 +11,10 @@ import org.apache.spark.sql.functions._
   * capture never touch the driver contract.
   *
   * Usage: `sbt "runMain graft.BenchExtra [runs=N] [plans] [query ...]"`
-  * (no query args = the full heavy set). Each query runs once untimed,
-  * then `runs` times, with the cache cleared before every timed run.
+  * (no query args = the full heavy set). Every listed query runs once
+  * untimed before any query is timed (a JVM's first query otherwise pays
+  * the JIT warm-up in its timed runs), then each runs `runs` times, with
+  * the cache cleared before every timed run. `profile` warms the same way.
   */
 object BenchExtra {
 
@@ -41,13 +43,20 @@ object BenchExtra {
     time("rewrite(full)", 1000)(graft.extract.PdfRewrite.redact(pdf))
   }
 
+  /** Runs every query once untimed and clears the cache: the JVM is warm
+    * before the first timed query, and an eager operator's cached result
+    * from building a frame never serves a timed run.
+    */
+  private def warm(spark: SparkSession, sfDir: String, names: Seq[String]): Unit = {
+    names.foreach(name => force(SparkEntry.queries(name)(spark, sfDir)))
+    spark.catalog.clearCache()
+  }
+
   /** Per-stage wall/task-time attribution for one query (guide §1.1): runs
-    * the query once warm, then once with a listener, printing each stage's
-    * task-time sum and row counts.
+    * the query once with a listener, printing its wall time and job count,
+    * then each stage's task-time sum and row counts.
     */
   def profile(spark: SparkSession, sfDir: String, name: String): Unit = {
-    force(SparkEntry.queries(name)(spark, sfDir)) // warm
-    spark.catalog.clearCache()
     val stages = scala.collection.mutable.LinkedHashMap.empty[Int, (String, Long, Long, Int)]
     val stageJob = scala.collection.mutable.HashMap.empty[Int, String]
     val listener = new org.apache.spark.scheduler.SparkListener {
@@ -85,7 +94,7 @@ object BenchExtra {
       org.apache.spark.sql.graftshim.Bridge.waitListeners(spark.sparkContext)
       spark.sparkContext.removeSparkListener(listener)
     }
-    println(f"== $name wall ${(System.nanoTime() - t0) / 1e9}%.3f s")
+    println(f"== $name wall ${(System.nanoTime() - t0) / 1e9}%.3f s jobs ${stageJob.values.toSet.size}")
     stages.toSeq.sortBy(-_._2._2).take(25).foreach { case (id, (nm, rt, sw, nt)) =>
       println(f"  stage $id%4d  runTime ${rt / 1000.0}%8.2f s  shufWrite ${sw / 1e6}%8.1f MB  tasks $nt%4d  $nm")
     }
@@ -129,6 +138,7 @@ object BenchExtra {
       spark.stop(); return
     }
     if (args.headOption.contains("profile")) {
+      warm(spark, sfDir, args.drop(1).toSeq)
       args.drop(1).foreach(n => profile(spark, sfDir, n))
       spark.stop(); return
     }
@@ -145,6 +155,7 @@ object BenchExtra {
       "url_dedup", "decontamination_scrub", "c4_filter", "hashed_quality",
       "knn_pq", "lm_quality_buckets", "repetition_filter")
 
+    warm(spark, sfDir, names)
     names.foreach { name =>
       if (dumpPlans) {
         val df = SparkEntry.queries(name)(spark, sfDir)
@@ -157,11 +168,6 @@ object BenchExtra {
           plan.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       }
       spark.sparkContext.setJobDescription(s"bench-extra: $name")
-      // one untimed run warms the JVM; building a frame runs an eager
-      // operator's work and caches its result, so the caches are cleared
-      // before the first timed run, as after every run
-      force(SparkEntry.queries(name)(spark, sfDir))
-      spark.catalog.clearCache()
       val times = (1 to runs).map { _ =>
         val t0 = System.nanoTime()
         force(SparkEntry.queries(name)(spark, sfDir))

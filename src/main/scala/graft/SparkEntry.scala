@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.gf
+import graft.functions.{Tokens, gf}
 import graft.metrics.Metrics
 import graft.ops.{BpeTrain, Conversations, Dedup, Drift, Dsir, Multimodal, Pq, Retrieval, Sampling, Similarity, TextStats, UrlOps, WebClean}
 import graft.pipeline.{Deid, TurnsGen}
@@ -725,10 +725,10 @@ object SparkEntry {
     // first 6 distinct tokens of docs 0..19 in first-occurrence order.
     "bm25_topk" -> ((s, dir) => {
       val d = docs(s, dir)
-      Retrieval.bm25TopK(spread(d),
+      Retrieval.bm25TopK(d,
           Retrieval.queryTerms(d.where(col("doc_id") < 20)), k = 5)
         // coalesce+sortWithinPartitions, NOT orderBy: the range sampler
-        // would execute the whole corpus-side tf chain a second time
+        // would execute the scoring chain a second time
         .coalesce(1).sortWithinPartitions("q_id", "rank")
     }),
 
@@ -989,8 +989,7 @@ object SparkEntry {
     // per-source rollup; integer numerators, divisions last ⇒ exact replay
     "vocab_stats" -> ((s, dir) => {
       val tf = docs(s, dir)
-        .select(col("source"), explode(filter(
-          split(lower(trim(col("text"))), "\\s+"), t => t =!= "")).as("tok"))
+        .select(col("source"), explode(Tokens.terms(col("text"))).as("tok"))
         .groupBy("source", "tok").agg(count(lit(1)).as("c"))
       tf.groupBy("source").agg(
           sum("c").as("n_tokens"),
@@ -1364,8 +1363,7 @@ object SparkEntry {
     // happens; the output is provably identical to the full-shuffle top-k,
     // so the oracle is the plain exact GROUP BY
     "heavy_hitters" -> ((s, dir) => {
-      val toks = docs(s, dir).select(explode(filter(
-          split(lower(trim(col("text"))), "\\s+"), t => t =!= "")).as("tok"))
+      val toks = docs(s, dir).select(explode(Tokens.terms(col("text"))).as("tok"))
         .unionAll(docs(s, dir)
           .select(concat(lit("u"), col("doc_id")).as("tok")))
       TextStats.heavyHittersExact(toks, "tok", k = 20, counters = 256)

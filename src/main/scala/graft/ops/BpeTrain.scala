@@ -39,8 +39,7 @@ object BpeTrain {
   /** Corpus → (word, cnt): lowercased whitespace words, one partial-agg
     * shuffle. Null/empty texts contribute nothing. */
   def wordCounts(df: DataFrame, textCol: String = "text"): DataFrame =
-    df.select(explode(filter(
-        split(lower(trim(col(textCol))), "\\s+"), t => t =!= "")).as("word"))
+    df.select(explode(graft.functions.Tokens.terms(col(textCol))).as("word"))
       .groupBy("word").agg(count(lit(1)).as("cnt"))
 
   /** Initial symbolization of a word: characters + `</w>`. */

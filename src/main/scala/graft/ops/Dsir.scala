@@ -48,7 +48,7 @@ object Dsir {
     * yield an empty array.
     */
   def featureArray(textCol: Column): Column = {
-    val toks = filter(split(lower(trim(textCol)), "\\s+"), t => t =!= "")
+    val toks = graft.functions.Tokens.terms(textCol)
     val bigrams = filter(
       zip_with(toks, slice(toks, lit(2), greatest(size(toks) - 1, lit(0))),
         (a, b) => concat(a, lit(" "), b)),

@@ -1,6 +1,8 @@
 package graft.ops
 
+import graft.functions.Tokens
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Text analysis for training-data pipelines: language-ID, quality scoring,
@@ -28,7 +30,7 @@ object TextStats {
 
   /** Heuristic language id: zh when CJK-heavy, else argmax stopword hits. */
   def langId(textCol: Column): Column = {
-    val toks = split(lower(trim(textCol)), "\\s+")
+    val toks = Tokens.words(textCol)
     val hits = stopwords.toSeq.sortBy(_._1).map { case (lang, words) =>
       // array(lit…) not typedLit: typedLit resolves its TypeTag through
       // runtime scala-reflect, which degrades to an unsupported plain
@@ -61,7 +63,7 @@ object TextStats {
     * float-free: (n_chars, n_tokens, n_stopwords, n_punct, n_distinct_tokens).
     */
   def qualityFacets(df: DataFrame, textCol: String = "text"): DataFrame = {
-    val toks = split(lower(trim(col(textCol))), "\\s+")
+    val toks = Tokens.words(col(textCol))
     val sw = array(stopwords("en").map(lit): _*) // reflection-free (see langId)
     df.withColumn("n_chars", length(col(textCol)))
       .withColumn("n_tokens", tokenCount(col(textCol)))
@@ -105,7 +107,7 @@ object TextStats {
     * any corpus size.
     */
   def gopherSignals(df: DataFrame, textCol: String = "text"): DataFrame = {
-    val toks = split(lower(trim(col(textCol))), "\\s+")
+    val toks = Tokens.words(col(textCol))
     val sw = array(stopwords("en").map(lit): _*)
     val lines = split(col(textCol), "\n")
     df.withColumn("n_tokens", tokenCount(col(textCol)))
@@ -150,14 +152,15 @@ object TextStats {
     * in the DuckDB oracle, where `ln` need not be) — the
     * keyword-extraction / topic-fingerprint pass of a corpus pipeline.
     *
-    * Scale shape: explode → partial-agg groupBy (id, term) for tf →
-    * partial-agg groupBy term for df (hot stopword terms are absorbed
-    * map-side by the partial aggregation) → join tf⋈df on term — the df
-    * side has ONE row per term (unique build key), so a hot term means
-    * many probe rows but no row explosion; broadcast the df frame when the
-    * vocabulary fits, else AQE handles the shuffle join — → one window
-    * shuffle on the doc id for top-k. `nDocs` comes from the caller
-    * (parquet footer count — no extra scan job).
+    * Scale shape: the [[Retrieval.postings]] tf rows (one doc-keyed
+    * exchange of the narrow (id, text) rows) → partial-agg groupBy term
+    * for df (hot stopword terms are absorbed map-side by the partial
+    * aggregation) → join tf⋈df on term — the df side has ONE row per term
+    * (unique build key), so a hot term means many probe rows but no row
+    * explosion; broadcast the df frame when the vocabulary fits, else AQE
+    * handles the shuffle join — → the top-k window on the doc id.
+    * `nDocs` comes from the caller (parquet footer count — no extra scan
+    * job).
     *
     * Ties rank by term ascending, so the output is fully deterministic.
     */
@@ -168,21 +171,16 @@ object TextStats {
       textCol: String = "text",
       k: Int = 3
   ): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val tf = docs
-      .select(col(idCol), explode(split(lower(trim(col(textCol))), "\\s+")).as("term"))
-      .where(col("term") =!= "")
-      .groupBy(col(idCol), col("term"))
-      .agg(count(lit(1)).as("tf"))
+    val tf = Retrieval.postings(docs, idCol, textCol)
     val dfreq = tf.groupBy("term").agg(count(lit(1)).as("df"))
     val scored = tf.join(dfreq, "term")
       .withColumn("score",
         col("tf").cast("double") * lit(nDocs.toDouble) / col("df").cast("double"))
     scored
       .withColumn("rank", row_number().over(
-        Window.partitionBy(col(idCol)).orderBy(col("score").desc, col("term").asc)))
+        Window.partitionBy("doc_id").orderBy(col("score").desc, col("term").asc)))
       .where(col("rank") <= k)
-      .select(col(idCol), col("rank"), col("term"), col("tf"), col("df"), col("score"))
+      .select(col("doc_id").as(idCol), col("rank"), col("term"), col("tf"), col("df"), col("score"))
   }
 
   /** Gopher repetition signals (Rae et al. 2021 §A1.1 — the repetition
@@ -216,21 +214,18 @@ object TextStats {
       idCol: String = "doc_id",
       textCol: String = "text"
   ): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val lines = split(col(textCol), "\n")
     val lineSig = docs.select(
       col(idCol),
       size(lines).as("n_lines"),
       (size(lines) - size(array_distinct(lines))).as("n_dup_lines"))
-    // split(trim) never yields interior empties; a leading tab keeps its
-    // leading "" token (the pinned ShinglesExpr semantics) — both engines
-    // see the identical token sequence, so no filter step that would
-    // re-index adjacency. r8: adjacent pairs come from a scan-stage
-    // zip_with over the token array (the Dsir.featureArray shape) instead
-    // of posexplode + lead window — same pair sequence (the trailing
-    // (last, null) pair nulls out and is filtered), no doc-keyed exchange
-    // + sort before the bigram aggregation
-    val arr = split(lower(trim(col(textCol))), "\\s+")
+    // Tokens.words keeps its edge "" tokens (the pinned ShinglesExpr
+    // semantics) — both engines see the identical token sequence, so no
+    // filter step that would re-index adjacency. Adjacent pairs come from a
+    // scan-stage zip_with over the token array (the Dsir.featureArray
+    // shape): the trailing (last, null) pair nulls out and is filtered, and
+    // no doc-keyed exchange + sort precedes the bigram aggregation
+    val arr = Tokens.words(col(textCol))
     val bigArr = filter(
       zip_with(arr, slice(arr, lit(2), greatest(size(arr) - 1, lit(0))),
         (a, b) => when(a =!= "" && b =!= "", concat(a, lit(" "), b))),
@@ -285,8 +280,8 @@ object TextStats {
     *    count (the paper's "taking care not to count characters twice") —
     *    over total token character mass.
     *
-    * Tokenization is the pinned `split(lower(trim(text)), '\s+')`; windows
-    * containing an empty token (leading-tab artifact) are skipped, the
+    * Tokenization is [[graft.functions.Tokens.words]]; windows
+    * containing an empty token (edge-whitespace artifact) are skipped, the
     * [[repetitionSignals]] bigram discipline. Every numerator and
     * denominator is an exact integer aggregate; each emitted fraction is
     * ONE trailing IEEE division, so a DuckDB oracle replays all 13 signals
@@ -332,10 +327,9 @@ object TextStats {
         charSum(units).as(s"${prefix}_chars"))
     }
 
-    // the pinned tokenizer: split(lower(trim(text)), '\s+') — split(trim)
-    // never yields interior empties; a leading tab keeps its leading ""
-    // token, and windows containing an empty token are skipped below
-    val arr = split(lower(trim(col(textCol))), "\\s+")
+    // Tokens.words keeps its edge "" tokens; windows containing an empty
+    // token are skipped below
+    val arr = Tokens.words(col(textCol))
     val scalars = docs.select(
       col(idCol) +: (unitCols("\n", "line") ++ unitCols("\n\n", "para") ++ Seq(
         size(arr).cast("long").as("n_tokens"),
@@ -349,7 +343,6 @@ object TextStats {
     // re-executed once per consumer (guide §5 — reuse beats recompute when
     // the subtree is an exchange+sort). Callers release via
     // catalog.clearCache (the sentenceSpanDedup persist contract).
-    import org.apache.spark.sql.expressions.Window
     val toks = docs.select(col(idCol), posexplode(arr))
       .toDF(idCol, "pos", "term")
     val w = Window.partitionBy(col(idCol)).orderBy(col("pos"))
@@ -510,9 +503,7 @@ object TextStats {
       idCol: String = "doc_id",
       textCol: String = "text"
   ): DataFrame = {
-    val toks = docs
-      .select(col(idCol), explode(split(lower(trim(col(textCol))), "\\s+")).as("term"))
-      .where(col("term") =!= "")
+    val toks = docs.select(col(idCol), explode(Tokens.terms(col(textCol))).as("term"))
     val cnt = toks.groupBy("term").agg(count(lit(1)).as("cnt"))
     val scored = toks.join(cnt, "term")
       .groupBy(col(idCol))

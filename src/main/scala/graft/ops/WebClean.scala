@@ -101,7 +101,7 @@ object WebClean {
                         buckets: Int = 1 << 20): DataFrame = {
     require(buckets > 0 && buckets <= (1 << 24),
       s"buckets must be in (0, 2^24] (24 hash bits are drawn), got $buckets")
-    val toks = split(lower(trim(col(textCol))), "\\s+")
+    val toks = graft.functions.Tokens.words(col(textCol))
     def weight(t: Column): Column = {
       val bucket = pmod(
         conv(substring(sha2(t, 256), 1, 6), 16, 10).cast("long"),

@@ -126,8 +126,7 @@ object ScaleProbe {
       val tPq = best3(force(graft.ops.Pq.topK(e, qv, cbP, k = 5)))
       val tIvfpq = best3(force(graft.ops.Pq.ivfPqTopK(e, qv,
         graft.ops.Pq.fixedCodebook(1, 16, 64).head, cbP, k = 5, nprobe = 2)))
-      val hhToks = d.select(explode(filter(
-          split(lower(trim(col("text"))), "\\s+"), t => t =!= "")).as("tok"))
+      val hhToks = d.select(explode(graft.functions.Tokens.terms(col("text"))).as("tok"))
         .unionAll(d.select(concat(lit("u"), col("doc_id")).as("tok")))
       val tHh = best3(force(
         graft.ops.TextStats.heavyHittersExact(hhToks, "tok", k = 20, counters = 256)))

@@ -35,10 +35,11 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("minhash LSH finds planted near-duplicates with high jaccard") {
-    val pairs = Dedup.minhashNearDups(planted, threshold = 0.5)
-      .collect()
+    val nearDups = Dedup.minhashNearDups(planted, threshold = 0.5)
+    val pairs = nearDups.collect()
       .map(r => (r.getAs[Long]("a"), r.getAs[Long]("b")))
       .toSet
+    nearDups.unpersist()
     val wanted = docs.where($"doc_id" % 10 === 0)
       .select($"doc_id").as[Long].collect()
       .map(id => (id, id + 100000)).toSet
@@ -283,20 +284,22 @@ class OpsSpec extends AnyFunSuite {
       (2L, s"$shared delta epsilon zeta"),
       (3L, "unrelated words entirely different content here nothing shared with others at all"))
       .toDF("doc_id", "text")
-    val spans = Dedup.duplicatedWindowSpans(d, k = 8)
+    val windows = Dedup.duplicatedWindowSpans(d, k = 8)
+    val spans = windows
       .collect().map(r => (r.getAs[Long]("doc_id"),
         r.getAs[Int]("tok_start"), r.getAs[Int]("tok_end"))).toSet
     // doc1 carries the shared run at tokens [2, 14) -> window starts 2..6;
     // doc2 at [0, 12) -> starts 0..4; doc3 shares nothing
     assert(spans == ((2 to 6).map(i => (1L, i, i + 8)) ++
       (0 to 4).map(i => (2L, i, i + 8))).toSet, spans)
-    val merged = Dedup.mergeTokenSpans(Dedup.duplicatedWindowSpans(d, k = 8))
+    val merged = Dedup.mergeTokenSpans(windows)
       .collect().map(r => (r.getAs[Long]("doc_id"),
         r.getAs[Int]("tok_start"), r.getAs[Int]("tok_end"))).toSet
     assert(merged == Set((1L, 2, 14), (2L, 0, 12)), merged)
     // char spans line up with the token content
-    val row = Dedup.mergeTokenSpans(Dedup.duplicatedWindowSpans(d, k = 8))
+    val row = Dedup.mergeTokenSpans(windows)
       .where($"doc_id" === 1L).select("start", "end").first()
+    windows.unpersist()
     val doc1 = s"alpha beta $shared gamma"
     assert(doc1.substring(row.getInt(0), row.getInt(1)) == shared)
     // a window repeated twice WITHIN one doc is not cross-doc duplication
@@ -304,7 +307,9 @@ class OpsSpec extends AnyFunSuite {
       (1L, "a b c d e f g h a b c d e f g h"),
       (2L, "totally distinct tokens only here nothing else matches anything"))
       .toDF("doc_id", "text")
-    assert(Dedup.duplicatedWindowSpans(selfRep, k = 8).count() == 0)
+    val selfWindows = Dedup.duplicatedWindowSpans(selfRep, k = 8)
+    assert(selfWindows.count() == 0)
+    selfWindows.unpersist()
   }
 
   test("window-merge boundary proof: merged spans == true maximal duplicated runs for runs >= k") {
@@ -321,9 +326,11 @@ class OpsSpec extends AnyFunSuite {
     def spansOf(docs: Seq[(Long, Seq[String])]): Set[(Long, Int, Int)] = {
       val df = docs.map { case (id, toks) => (id, toks.mkString(" ")) }
         .toDF("doc_id", "text")
-      Dedup.mergeTokenSpans(Dedup.duplicatedWindowSpans(df, k = k))
+      val windows = Dedup.duplicatedWindowSpans(df, k = k)
+      try Dedup.mergeTokenSpans(windows)
         .collect().map(r => (r.getAs[Long]("doc_id"),
           r.getAs[Int]("tok_start"), r.getAs[Int]("tok_end"))).toSet
+      finally windows.unpersist()
     }
 
     // L = k-1: below the window size, invisible
@@ -579,9 +586,10 @@ class OpsSpec extends AnyFunSuite {
     val queries = emb.where($"vec_id" < 20)
     val brute = Similarity.bruteForceTopK(emb, queries, k = 5)
       .select($"q_id", $"n_id").as[(Long, Long)].collect().toSet
-    val approx = Similarity.lshTopK(emb, k = 5, bits = 4, tables = 16)
-      .where($"q_id" < 20)
+    val lsh = Similarity.lshTopK(emb, k = 5, bits = 4, tables = 16)
+    val approx = lsh.where($"q_id" < 20)
       .select($"q_id", $"n_id").as[(Long, Long)].collect().toSet
+    lsh.unpersist()
     val recall = brute.intersect(approx).size.toDouble / brute.size
     assert(recall >= 0.7, s"ANN recall $recall")
   }
@@ -597,9 +605,10 @@ class OpsSpec extends AnyFunSuite {
     val queries = emb.where($"vec_id" < 20)
     val brute = Similarity.bruteForceTopK(emb, queries, k = 5)
       .select($"q_id", $"n_id").as[(Long, Long)].collect().toSet
-    val approx = Similarity.lshTopK(emb, k = 5, nHint = n)
-      .where($"q_id" < 20)
+    val lsh = Similarity.lshTopK(emb, k = 5, nHint = n)
+    val approx = lsh.where($"q_id" < 20)
       .select($"q_id", $"n_id").as[(Long, Long)].collect().toSet
+    lsh.unpersist()
     val recall = brute.intersect(approx).size.toDouble / brute.size
     assert(recall >= 0.8, s"general-regime ANN recall $recall below floor")
   }
@@ -631,9 +640,10 @@ class OpsSpec extends AnyFunSuite {
     val copies = emb.where($"vec_id" % 10 === 0)
       .select(($"vec_id" + 100000).as("vec_id"), $"embedding")
     val planted = emb.union(copies)
-    val pairs = Similarity.cosineNearDups(planted, threshold = 0.999,
+    val found = Similarity.cosineNearDups(planted, threshold = 0.999,
         bits = 20, tables = 4)
-      .select($"a", $"b").as[(Long, Long)].collect().toSet
+    val pairs = found.select($"a", $"b").as[(Long, Long)].collect().toSet
+    found.unpersist()
     val wanted = emb.where($"vec_id" % 10 === 0)
       .select($"vec_id").as[Long].collect()
       .map(id => (id, id + 100000)).toSet
@@ -646,8 +656,10 @@ class OpsSpec extends AnyFunSuite {
       .select(($"vec_id" + 100000).as("vec_id"), $"embedding")
     val plantedVecs = emb.select($"vec_id", $"embedding").union(copies)
     val centroids = graft.ops.Ivf.train(emb, k = 16, iters = 2)
-    val got = Similarity.semanticNearDups(plantedVecs, centroids.map(_.toSeq).toSeq, threshold = 0.9)
-      .select($"a", $"b").as[(Long, Long)].collect().toSet
+    val sem = Similarity.semanticNearDups(plantedVecs, centroids.map(_.toSeq).toSeq,
+      threshold = 0.9)
+    val got = sem.select($"a", $"b").as[(Long, Long)].collect().toSet
+    sem.unpersist()
     // exact brute force over the same planted corpus at the same threshold
     val exact = plantedVecs.select($"vec_id".as("id"),
         $"embedding".cast("array<double>").as("v"))

@@ -4,7 +4,7 @@ import graft.detect.{CpOffsets, Detectors, RegexRules, Resolver}
 import graft.detect.RegexRules.Anchor
 import graft.detect.RegexRules.Anchor.{Before, Digits}
 import java.util.regex.Pattern
-import graft.functions.FakeProvider
+import graft.functions.{FakeProvider, Tokens}
 import graft.model.SpanEnt
 import graft.pipeline.DeidCore
 import graft.redact.Redactor
@@ -18,7 +18,8 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - replacement is deterministic;
   *  - the single-pass splice fast path ≡ the exact Python-emulation path
   *    on arbitrary (incl. overlapping) span sets;
-  *  - the anchored regex scan ≡ running every rule's pattern with `find`.
+  *  - the anchored regex scan ≡ running every rule's pattern with `find`;
+  *  - the pinned lexical tokenizer ≡ its plain-Scala reading.
   */
 class PropertySpec extends AnyFunSuite {
 
@@ -269,6 +270,42 @@ class PropertySpec extends AnyFunSuite {
     val smile = supplementary.head
     for (text <- Seq(smile + "鄰", smile + smile + "1", "a" + smile + "鄰1")) {
       assert(Detectors.regexDetect(text, rules).toSeq == unanchored(text, rules, "regex"), text)
+    }
+  }
+
+  test("Tokens.words / Tokens.terms == trim spaces, lowercase, split on Java \\s") {
+    // plain-Scala reading of split(lower(trim(text)), '\s+'): trim strips
+    // U+0020 only; lower is ICU's root-locale full case mapping (a word-final
+    // Σ becomes ς by context, İ becomes i + U+0307 — not java.lang's
+    // toLowerCase, whose final-sigma test differs); split keeps edge ""
+    // tokens (limit -1); Java \s is [ \t\n\x0B\f\r], so NBSP and U+3000
+    // are token characters
+    def refWords(t: String): Seq[String] =
+      if (t == null) null
+      else com.ibm.icu.lang.UCharacter.toLowerCase(com.ibm.icu.util.ULocale.ROOT,
+        t.dropWhile(_ == ' ').reverse.dropWhile(_ == ' ').reverse).split("\\s+", -1).toSeq
+    def refTerms(t: String): Seq[String] =
+      Option(refWords(t)).map(_.filter(_.nonEmpty)).orNull
+    val ws = Seq(" ", "\t", "\n", "\u000B", "\u000C", "\r", "\u00A0", "\u3000")
+    val edge = Seq(null, "", " ", "   ", "\t", " \t ", "\n\n", "\u000B", "\u000C",
+      "\u00A0", "\u3000", "a", "\ta", "a\t", " \ta b\n ", "\u000Ba\u000Cb\u000B",
+      "\u00A0a\u00A0 b", "x\u3000y z", "İstanbul İ", "ΟΔΟΣ ΣΑΣ Σ", "ǅemal ǄǅǆA",
+      "Straße ÀÉÎ", "語 文\t字")
+    val gen = for {
+      n <- Gen.choose(0, 10)
+      parts <- Gen.listOfN(n, Gen.frequency(3 -> Gen.oneOf(ws),
+        4 -> Gen.oneOf("a", "Bc", "İ", "Σ", "ΣΑΣ", "ς", "ǅ", "語", "x1", "-")))
+    } yield parts.mkString
+    val texts = edge ++ Gen.listOfN(500, gen).apply(Gen.Parameters.default,
+      org.scalacheck.rng.Seed(20261019L)).get
+    val spark = SparkTestBase.spark
+    import spark.implicits._
+    val rows = texts.zipWithIndex.map(_.swap).toDF("i", "text")
+      .select($"i", Tokens.words($"text"), Tokens.terms($"text"))
+      .collect().map(r => r.getInt(0) -> (Option(r.getSeq[String](1)).orNull,
+        Option(r.getSeq[String](2)).orNull)).toMap
+    texts.zipWithIndex.foreach { case (t, i) =>
+      assert(rows(i) == ((refWords(t), refTerms(t))), s"text ${Option(t).map(_.map(_.toInt))}")
     }
   }
 }

@@ -1,7 +1,12 @@
 package graft
 
 import graft.ops.Retrieval
+import org.apache.spark.sql.execution.{FileSourceScanExec, GenerateExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Sparse retrieval + rank fusion (ops/Retrieval.scala): BM25 under the
@@ -206,13 +211,69 @@ class RetrievalSpec extends AnyFunSuite {
       Retrieval.prfExpandedTopK(c, q, kFeedback = 0))
   }
 
+  /** Broadcast exchanges in the plan that carry un-aggregated rows: a path
+    * from the exchange to a leaf scan passes no aggregate.
+    */
+  private def rawBroadcasts(df: org.apache.spark.sql.DataFrame): Seq[SparkPlan] = {
+    def raw(p: SparkPlan): Boolean = p match {
+      case _: BaseAggregateExec => false
+      case _ if p.children.isEmpty => true
+      case _ => p.children.exists(raw)
+    }
+    plans.collect(df.queryExecution.executedPlan) { case b: BroadcastExchangeExec => b }
+      .filter(b => raw(b.child))
+  }
+  private val plans = new AdaptiveSparkPlanHelper {}
+
   test("bm25TopK plan: corpus is never broadcast; query-side joins are") {
     val queries = Retrieval.queryTerms(corpus.where($"doc_id" === 1), nTerms = 6)
-    val plan = Retrieval.bm25TopK(corpus, queries, k = 5)
-      .queryExecution.executedPlan.toString
-    // query terms, df, per-query terms and the one-row stats frame all
-    // arrive via broadcast; the only shuffled joins key on doc_id (dl) —
-    // bounded by the corpus, never a corpus×query blow-up
-    assert(plan.contains("BroadcastHashJoin") || plan.contains("BroadcastNestedLoopJoin"))
+    for (df <- Seq(Retrieval.bm25TopK(corpus, queries, k = 5),
+        Retrieval.prfExpandedTopK(corpus, queries, kFeedback = 2, mExpansion = 1, k = 3))) {
+      val plan = df.queryExecution.executedPlan.toString
+      // query terms, df, per-query terms, the one-row stats frame and the
+      // feedback docs all arrive via broadcast, each an aggregate's output
+      // bounded by the query workload — never the corpus rows themselves
+      assert(plan.contains("BroadcastHashJoin") || plan.contains("BroadcastNestedLoopJoin"))
+      assert(rawBroadcasts(df).isEmpty, plan)
+    }
+  }
+
+  test("prfExpandedTopK tokenizes its corpus once; its postings fan out") {
+    val dir = java.nio.file.Files.createTempDirectory("prf-corpus").toString
+    Seq((1L, "alpha bridge bridge"), (2L, "alpha filler words"),
+        (3L, "bridge bridge bridge unrelated"), (4L, "nothing relevant here at all"))
+      .toDF("doc_id", "text").write.mode("overwrite").parquet(dir)
+    val c = spark.read.parquet(dir)
+    val q = Seq((9L, "alpha")).toDF("q_id", "term")
+    val executed = scala.collection.mutable.ArrayBuffer.empty[SparkPlan]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        executed.synchronized(executed += qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      // building runs the postings checkpoint; collecting runs the rest
+      Retrieval.prfExpandedTopK(c, q, kFeedback = 2, mExpansion = 1, k = 4).collect()
+      org.apache.spark.sql.graftshim.Bridge.waitListeners(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    // every explode of the corpus text: a Generate whose subtree scans the
+    // parquet corpus (the queries are a local frame and explode nothing)
+    val tokenizes = executed.toSeq.flatMap(p => plans.collectWithSubqueries(p) {
+      case g: GenerateExec if plans.find(g)(_.isInstanceOf[FileSourceScanExec]).isDefined => g
+    })
+    assert(tokenizes.size === 1, executed.mkString("\n"))
+
+    // one corpus-side exchange: tf and dl reuse its doc_id partitioning
+    val built = Retrieval.postings(c)
+    assert(plans.collect(built.queryExecution.executedPlan) {
+      case e: ShuffleExchangeExec => e }.size === 1)
+    val p = built.localCheckpoint(true)
+    assert(p.rdd.getNumPartitions >= spark.sparkContext.defaultParallelism)
+    assert(p.as[(Long, String, Long, Long)].collect().toSet === Set(
+      (1L, "alpha", 1L, 3L), (1L, "bridge", 2L, 3L), (2L, "alpha", 1L, 3L),
+      (2L, "filler", 1L, 3L), (2L, "words", 1L, 3L), (3L, "bridge", 3L, 4L),
+      (3L, "unrelated", 1L, 4L), (4L, "nothing", 1L, 5L), (4L, "relevant", 1L, 5L),
+      (4L, "here", 1L, 5L), (4L, "at", 1L, 5L), (4L, "all", 1L, 5L)))
   }
 }
