@@ -670,8 +670,7 @@ object SparkEntry {
     "semantic_dedup_pairs" -> ((s, dir) => {
       val planted = plantedEmbeddings(s, dir)
       Similarity.semanticNearDups(planted,
-          trainedCentroids(s, dir).map(_.toSeq).toSeq, threshold = 0.9,
-          maxClusterSize = 2000)
+          trainedCentroids(s, dir).map(_.toSeq).toSeq, threshold = 0.9)
         .select(col("a"), col("b"))
         .orderBy("a", "b")
     }),
@@ -686,8 +685,7 @@ object SparkEntry {
     "semantic_dedup_keepers" -> ((s, dir) => {
       val planted = plantedEmbeddings(s, dir)
       val pairs = Similarity.semanticNearDups(planted,
-          trainedCentroids(s, dir).map(_.toSeq).toSeq, threshold = 0.9,
-          maxClusterSize = 2000)
+          trainedCentroids(s, dir).map(_.toSeq).toSeq, threshold = 0.9)
       // semanticNearDups' contract hands the caller the eagerly-persisted
       // pairs frame; CC's result is locally checkpointed (independent of
       // the pairs lineage), so release the cache before returning instead

@@ -1,6 +1,7 @@
 package graft.metrics
 
 import graft.obs.JobLabel
+import graft.plans.Gate
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StructField, StructType}
@@ -20,9 +21,10 @@ object Rank {
     * aligned with `ks(n)`.
     *
     * One heads pass counts every group, under the `maxGroups`
-    * bounded-collect guard (the per-group state is driver-side). Then the
+    * bounded-collect guard (the per-group state is driver-side). The
+    * largest group's n goes through the `Rank.select` [[Gate]], and the
     * groups are routed by size:
-    *  - n <= `smallGroupMax`: one lazy aggregation,
+    *  - n <= the gate's threshold: one lazy aggregation,
     *    `element_at(sort_array(collect_list(tuple)), k)` — a buffer of n
     *    tuples (8 B a key) per group and no further job;
     *  - larger groups (a billion-row group must never sit in one buffer):
@@ -34,8 +36,7 @@ object Rank {
     *    pass at least halves a 64-bit interval: at most 64 passes a level.
     */
   def select(df: DataFrame, groupCol: String, keys: Seq[Column],
-      ks: Long => Seq[Long], maxGroups: Int = 100000,
-      smallGroupMax: Long = 1L << 20): DataFrame = {
+      ks: Long => Seq[Long], maxGroups: Int = 100000): DataFrame = {
     require(keys.nonEmpty, "Rank.select: no keys")
     val names = keys.indices.map(i => s"k$i")
     val base = df.select(col(groupCol) +: keys.zip(names).map { case (k, n) =>
@@ -49,8 +50,10 @@ object Rank {
         "use a reporting dimension or raise maxGroups")
     val ranksOf = (n: Long) => ks(n).map(k => math.max(1L, math.min(k, n)))
     val tuple = struct(names.map(col): _*)
-    val large = heads.filter(_.getLong(1) > smallGroupMax)
-    if (large.isEmpty) return inBuffer(base, groupCol, tuple, ranksOf)
+    val largest = heads.map(_.getLong(1)).maxOption.getOrElse(0L)
+    if (Gate.choose(df.sparkSession, "Rank.select", largest))
+      return inBuffer(base, groupCol, tuple, ranksOf)
+    val large = heads.filter(_.getLong(1) > Gate.threshold("Rank.select"))
     val largeKeys = large.map(_.get(0))
     val exact = bisect(base.where(col(groupCol).isInCollection(largeKeys)),
       groupCol, tuple, large.toSeq, ranksOf)

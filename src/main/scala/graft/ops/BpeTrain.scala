@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.obs.JobLabel
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -128,12 +129,14 @@ object BpeTrain {
       nMerges: Int = 100,
       maxWords: Int = 1000000): Seq[(String, String)] = {
     val wc = wordCounts(df, textCol)
-    val n = wc.limit(maxWords + 1).count()
+    val spark = df.sparkSession
+    val n = JobLabel(spark, "BpeTrain.train: vocabulary guard")(wc.limit(maxWords + 1).count())
     require(n <= maxWords,
       s"BpeTrain.train: distinct vocabulary exceeds maxWords=$maxWords; " +
         "raise the cap explicitly or pre-prune rare words (a word below any " +
         "pair's winning count cannot change the learned merges)")
-    val rows = wc.collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+    val rows = JobLabel(spark, "BpeTrain.train: word counts")(wc.collect())
+      .map(r => (r.getString(0), r.getLong(1))).toSeq
     // collect() order is partition-dependent; the loop is order-free (counts
     // are summed over the whole table, ties break lexicographically)
     learnMerges(rows, nMerges)

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.plans.Gate
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -502,10 +503,11 @@ object Dedup {
     * near-dup evidence into the keep/drop decision a dedup pipeline
     * actually executes at corpus scale.
     *
-    * A graph of at most `smallGraphMax` edges with Long ids is union-found
-    * on the driver in one collect; any other graph (including non-Long id
-    * types) takes [[connectedComponentsAlternating]], which converges in
-    * O(log n) rounds on any diameter. Both emit the same labeling.
+    * A graph with Long ids and at most the `connectedComponents` [[Gate]]
+    * threshold of edges is union-found on the driver in one collect; any
+    * other graph (including non-Long id types) takes
+    * [[connectedComponentsAlternating]], which converges in O(log n)
+    * rounds on any diameter. Both emit the same labeling.
     *
     * `edges` = (a, b) pairs (any near-dup query's output); `nodes` = the
     * full id set (isolated docs keep their own id as cluster).
@@ -513,26 +515,22 @@ object Dedup {
   def connectedComponents(
       edges: DataFrame,
       nodes: DataFrame,
-      idCol: String = "doc_id",
-      smallGraphMax: Long = 1L << 20
+      idCol: String = "doc_id"
   ): DataFrame = {
-    import org.apache.spark.sql.functions.col
     // small-graph fast path (the IVF-centroid bounded-collect contract): a
-    // pair graph under `smallGraphMax` edges (16 MB of id pairs at the
-    // default bound) union-finds on the driver — one collect + one
-    // broadcast join instead of O(log n) iterative join rounds. Long ids
-    // only (the union-by-min order must equal Spark's min semantics),
-    // probed with `limit(n+1)` so an over-bound edge set is never fully
-    // collected.
+    // pair graph under the gate's edge count union-finds on the driver —
+    // one collect + one broadcast join instead of O(log n) iterative join
+    // rounds. Long ids only (the union-by-min order must equal Spark's min
+    // semantics), probed with `limit(n+1)` so an over-bound edge set is
+    // never fully collected.
     val longIds = Seq(edges.schema("a").dataType, edges.schema("b").dataType,
-      nodes.schema(idCol).dataType)
-      .forall(_ == org.apache.spark.sql.types.LongType)
-    val edgeProbe =
-      if (longIds) graft.obs.JobLabel(edges.sparkSession,
-        "connectedComponents: union-find collect")(
-        edges.limit((smallGraphMax + 1).toInt).select("a", "b").collectAsList())
-      else java.util.Collections.emptyList[org.apache.spark.sql.Row]()
-    if (longIds && edgeProbe.size() <= smallGraphMax) {
+      nodes.schema(idCol).dataType).forall(_ == org.apache.spark.sql.types.LongType)
+    if (!longIds) return connectedComponentsAlternating(edges, nodes, idCol)
+    val spark = edges.sparkSession
+    val maxEdges = math.min(Gate.threshold("connectedComponents"), Int.MaxValue - 1L)
+    val edgeProbe = graft.obs.JobLabel(spark, "connectedComponents: union-find collect")(
+      edges.limit(maxEdges.toInt + 1).select("a", "b").collectAsList())
+    if (Gate.choose(spark, "connectedComponents", edgeProbe.size())) {
       val parent = scala.collection.mutable.HashMap.empty[Long, Long]
       def find(x: Long): Long = {
         var r = x
@@ -547,22 +545,14 @@ object Dedup {
         // exactly the min-label fixpoint
         if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
       }
-      val labelRows = parent.keys.toSeq.map(x =>
-        org.apache.spark.sql.Row(x, find(x)))
-      val spark = edges.sparkSession
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("id",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("lbl",
-          org.apache.spark.sql.types.LongType, nullable = false)))
+      import org.apache.spark.sql.types.{LongType, StructField, StructType}
+      val labelRows = parent.keys.toSeq.map(x => org.apache.spark.sql.Row(x, find(x)))
+      val schema = StructType(Seq(StructField("id", LongType, nullable = false),
+        StructField("lbl", LongType, nullable = false)))
       val labelDf = spark.createDataFrame(
         spark.sparkContext.parallelize(labelRows, 1), schema)
-      nodes
-        .join(org.apache.spark.sql.functions.broadcast(labelDf),
-          col(idCol) === col("id"), "left")
-        .select(col(idCol),
-          org.apache.spark.sql.functions.coalesce(col("lbl"), col(idCol))
-            .as("component"))
+      nodes.join(broadcast(labelDf), col(idCol) === col("id"), "left")
+        .select(col(idCol), coalesce(col("lbl"), col(idCol)).as("component"))
     } else connectedComponentsAlternating(edges, nodes, idCol)
   }
 
@@ -754,7 +744,7 @@ object Dedup {
       .select(col("id").as(idCol), col("tok_start"), col("tok_end"),
         col("start"), col("end"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    result.count()
+    graft.obs.JobLabel(docs.sparkSession, "duplicatedWindowSpans: result count")(result.count())
     wins.unpersist()
     result
   }
@@ -783,49 +773,39 @@ object Dedup {
     * Scale shape: the reference side reduces to DISTINCT window digests
     * and is BROADCAST (the common case — benchmarks are MBs, corpora are
     * TBs), so the 100-TB side is one narrow scan + broadcast-hash
-    * semi-join with NO shuffle. Set `broadcastReference = false` for a
-    * large reference (falls back to a digest-keyed shuffle join).
-    *
-    * ==Broadcast size guard== An unconditional broadcast of a HUGE
-    * benchmark suite would blow the driver/broadcast limits, so the
-    * broadcast is gated on `refRowsHint` (approximate count of reference
-    * k-token WINDOWS ≈ total reference tokens, from catalog stats /
-    * footer-derived size — same no-job discipline as
-    * [[graft.ops.Similarity.lshTopK]]'s `nHint`): when the
-    * hint exceeds `maxBroadcastRows` (default 4M windows ≈ a few hundred
-    * MB of 64-byte digest rows — inside Spark's 8 GB broadcast ceiling
-    * with headroom), the join falls back to the digest-keyed shuffle path
-    * regardless of `broadcastReference`. `refRowsHint = 0` (no hint)
-    * trusts the caller's `broadcastReference` — the documented
-    * assume-benchmarks-are-small default.
+    * semi-join with NO shuffle. A reference over the
+    * `decontamination.broadcast` [[Gate]] threshold takes a digest-keyed
+    * shuffle join instead ([[referenceSide]]).
     */
   def contaminatedSpans(
       corpus: DataFrame,
       reference: DataFrame,
       idCol: String = "doc_id",
       textCol: String = "text",
-      k: Int = 8,
-      broadcastReference: Boolean = true,
-      refRowsHint: Long = 0L,
-      maxBroadcastRows: Long = 4_000_000L
+      k: Int = 8
   ): DataFrame = {
     require(k >= 1, "window size k must be >= 1")
-    val refW = tokenWindows(reference, idCol, textCol, k).select("w").distinct()
-    val doBroadcast = broadcastReference &&
-      (refRowsHint <= 0L || refRowsHint <= maxBroadcastRows)
-    // over the cap the shuffle path is pinned with an explicit hint —
-    // Catalyst's size ESTIMATE for the distinct-digest aggregate cannot see
-    // the true distinct count and could still auto-broadcast a frame the
-    // caller just declared driver-hostile
-    val refSide =
-      if (doBroadcast) broadcast(refW)
-      else if (refRowsHint > maxBroadcastRows) refW.hint("shuffle_hash")
-      else refW
+    val refSide = referenceSide(reference,
+      tokenWindows(reference, idCol, textCol, k).select("w").distinct())
     tokenWindows(corpus, idCol, textCol, k)
       .join(refSide, Seq("w"), "left_semi")
       .select(col("id").as(idCol), col("tok_start"), col("tok_end"),
         col("start"), col("end"))
   }
+
+  /** The reference digests `refW` as the build side of a decontamination
+    * join. An unconditional broadcast of a HUGE benchmark suite would blow
+    * the driver / broadcast limits, so the `decontamination.broadcast`
+    * [[Gate]] measures the reference's Catalyst size estimate (no job): at
+    * or under its threshold the digests broadcast; over it, or without
+    * statistics, the join shuffles on the digest, pinned with a hint —
+    * Catalyst's estimate for the distinct-digest aggregate cannot see the
+    * true distinct count and could still auto-broadcast it.
+    */
+  private def referenceSide(reference: DataFrame, refW: DataFrame): DataFrame =
+    if (Gate.choose(reference.sparkSession, "decontamination.broadcast",
+        Gate.estimatedBytes(reference.queryExecution.optimizedPlan))) broadcast(refW)
+    else refW.hint("shuffle_hash")
 
   /** Bloom-filter benchmark decontamination — the 100-TB shape of
     * [[contaminatedSpans]] for the regime where even the DISTINCT
@@ -867,6 +847,7 @@ object Dedup {
     import org.apache.spark.sql.graftshim.Bridge
     import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
     import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
+    val spark = corpus.sparkSession
     val numBits = org.apache.spark.util.sketch.BloomFilter
       .optimalNumOfBits(expectedRefWindows, fpp)
     val refW = tokenWindows(reference, idCol, textCol, k).select("w").distinct()
@@ -876,7 +857,8 @@ object Dedup {
         Bridge.expression(xxhash64(col("w"))),
         Bridge.expression(lit(expectedRefWindows)),
         Bridge.expression(lit(numBits))).toAggregateExpression())
-      val bloomBytes = refW.agg(bloomAgg.as("bf")).head().getAs[Array[Byte]](0)
+      val bloomBytes = graft.obs.JobLabel(spark, "contaminatedSpansBloom: bloom filter")(
+        refW.agg(bloomAgg.as("bf")).head()).getAs[Array[Byte]](0)
       val mightContain = Bridge.column(BloomFilterMightContain(
         Literal(bloomBytes, org.apache.spark.sql.types.BinaryType),
         Bridge.expression(xxhash64(col("w")))))
@@ -893,7 +875,7 @@ object Dedup {
         .select(col("id").as(idCol), col("tok_start"), col("tok_end"),
           col("start"), col("end"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      result.count()
+      graft.obs.JobLabel(spark, "contaminatedSpansBloom: result count")(result.count())
       result
     } finally refW.unpersist()
   }
@@ -904,7 +886,7 @@ object Dedup {
     * windows occur anywhere in the reference/benchmark set — `n_windows`,
     * `n_hits`, `contaminated_frac`, and the any-hit flag
     * `is_contaminated` (the GPT-2/3 scrub decision: one colliding n-gram ⇒
-    * dirty). Same broadcast-or-shuffle reference guard as
+    * dirty). Same broadcast-or-shuffle reference side as
     * [[contaminatedSpans]]; the only addition is one per-doc aggregation
     * over the window frame — linear, keyed on the doc id. Documents with
     * fewer than k tokens have no windows: they survive with
@@ -915,20 +897,11 @@ object Dedup {
       reference: DataFrame,
       idCol: String = "doc_id",
       textCol: String = "text",
-      k: Int = 8,
-      broadcastReference: Boolean = true,
-      refRowsHint: Long = 0L,
-      maxBroadcastRows: Long = 4_000_000L
+      k: Int = 8
   ): DataFrame = {
     require(k >= 1, "window size k must be >= 1")
-    val refW = tokenWindows(reference, idCol, textCol, k)
-      .select("w").distinct().withColumn("hit", lit(1L))
-    val doBroadcast = broadcastReference &&
-      (refRowsHint <= 0L || refRowsHint <= maxBroadcastRows)
-    val refSide =
-      if (doBroadcast) broadcast(refW)
-      else if (refRowsHint > maxBroadcastRows) refW.hint("shuffle_hash")
-      else refW
+    val refSide = referenceSide(reference, tokenWindows(reference, idCol, textCol, k)
+      .select("w").distinct().withColumn("hit", lit(1L)))
     val agg = tokenWindows(corpus, idCol, textCol, k)
       .join(refSide, Seq("w"), "left")
       .groupBy(col("id"))

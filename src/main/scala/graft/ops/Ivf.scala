@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.obs.JobLabel
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -75,17 +76,18 @@ object Ivf {
       // farthest from the chosen set (ties by sample order). Better cell
       // coverage on hard corpora (+0.05-0.09 recall@5 at nprobe=4 on the
       // fixture); costs one bounded collect of the sample.
+      val spark = corpus.sparkSession
       var centroids: Array[Array[Double]] =
-        if (init == "hash")
+        if (init == "hash") JobLabel(spark, "Ivf.train: hash init")(
           base.orderBy(xxhash64(col("id"), lit(seed)), col("id"))
             .limit(k)
             .select(col("vec"))
-            .collect()
+            .collect())
             .map(_.getSeq[Double](0).toArray)
         else {
-          val sample = base
+          val sample = JobLabel(spark, "Ivf.train: maximin sample")(base
             .orderBy(xxhash64(col("id"), lit(seed)), col("id"))
-            .select(col("vec")).collect().map(_.getSeq[Double](0).toArray)
+            .select(col("vec")).collect()).map(_.getSeq[Double](0).toArray)
           def dist2(a: Array[Double], b: Array[Double]): Double = {
             var s = 0.0; var i = 0
             while (i < a.length) { val d = a(i) - b(i); s += d * d; i += 1 }
@@ -115,8 +117,8 @@ object Ivf {
           graft.functions.gf.nearestCentroids(col("vec"), centroids.toIndexedSeq.map(_.toIndexedSeq), 1)
             .getItem(0).as("cid"),
           col("vec"))
-        val updated = assigned.groupBy("cid").agg(dims.head, dims.tail: _*)
-          .collect()
+        val updated = JobLabel(spark, s"Ivf.train: Lloyd round ${it + 1}")(
+          assigned.groupBy("cid").agg(dims.head, dims.tail: _*).collect())
           .map(r => r.getInt(0) -> (0 until dim).map(d => r.getDouble(d + 1)).toArray)
           .toMap
         // empty clusters keep their previous centroid (standard Lloyd detail)

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.obs.JobLabel
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -78,13 +79,14 @@ object Pq {
       s"sampleCap must be >= ncent, got $sampleCap < $ncent (the bounded " +
         "driver collect is the contract — training never scans the full corpus)")
     val dim = nsub * subDim
-    val sample: Array[Array[Long]] = corpus
+    val sample: Array[Array[Long]] = JobLabel(corpus.sparkSession,
+      "Pq.trainCodebooks: sample")(corpus
       .select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("vec"))
       .where(size(col("vec")) === dim)
       .orderBy(xxhash64(col("id"), lit(seed)), col("id"))
       .limit(sampleCap)
       .select(col("vec"))
-      .collect()
+      .collect())
       .map(_.getSeq[Double](0).toArray.map(x => math.floor(x * 1000.0 + 0.5).toLong))
     require(sample.length >= ncent,
       s"corpus has ${sample.length} well-formed vectors, need >= $ncent")

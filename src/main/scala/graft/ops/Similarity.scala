@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.functions.PyRandom
+import graft.plans.Gate
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -290,7 +291,7 @@ object Similarity {
     * when clusters are coarser than the duplicate radius.
     *
     * ==Eager-materialization contract== UNIFORM across both the plain and
-    * the sub-split (`maxClusterSize > 0`) paths: this call is an ACTION
+    * the sub-split paths: this call is an ACTION
     * returning a persisted (MEMORY_AND_DISK) + materialized pair frame —
     * the caller owns its `unpersist()` — and every intermediate cache is
     * released before returning. (Previously the plain path returned a lazy
@@ -303,7 +304,6 @@ object Similarity {
       threshold: Double = 0.95,
       idCol: String = "vec_id",
       vecCol: String = "embedding",
-      maxClusterSize: Int = 0,
       subTables: Int = 8,
       seed: Long = 7L
   ): DataFrame = {
@@ -322,53 +322,53 @@ object Similarity {
       graft.obs.JobLabel(spark, "semanticNearDups: result count")(out.count())
       out
     }
-    if (maxClusterSize <= 0) eager(clusterPairs(assigned))
-    else {
-      // ==Hot-cluster sub-split== Candidate work is Σ cluster_size², so one
-      // popular template cluster IS the workload at corpus scale. Clusters
-      // above `maxClusterSize` are salt-banded WITHIN the cluster by
-      // multi-table sign-bit LSH: near-duplicates still collide in some
-      // table with high probability (and identical vectors in EVERY table
-      // — the exactness the planted-twin oracle pins survives), while the
-      // (cluster, table, bucket) candidates of the shared pair kernel
-      // bound candidate work by occupancy². The bit width derives from the
-      // largest hot cluster (the size aggregation is k rows — an explicit,
-      // documented collect; `assigned` is persisted so centroid
-      // assignment runs once, released before return). Residual honesty: a
-      // hot cluster of NEAR-IDENTICAL vectors does not split (same sign on
-      // every plane) — but then the true pair OUTPUT is itself quadratic
-      // and no candidate scheme can beat its own output size; the
-      // sub-split bounds the case that matters, a broad cluster with
-      // sparse duplicates.
-      val acached = assigned.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val sizes = graft.obs.JobLabel(spark, "semanticNearDups: cluster sizes")(
-          acached.groupBy("cluster").agg(count(lit(1)).as("cn"))
-            .where(col("cn") > maxClusterSize)
-            .collect().map(r => (r.getInt(0), r.getLong(1))))
-        if (sizes.isEmpty) eager(clusterPairs(acached))
-        else {
-          val hotIds = sizes.map(_._1).toSeq
-          val bits = math.max(1, math.ceil(
-            math.log(sizes.map(_._2).max.toDouble / maxClusterSize) / math.log(2.0)).toInt)
-          val planes = hyperplanes(centroids.head.length, bits * subTables, seed)
-          // ids ONLY through the bucket exchange (the lshTables discipline:
-          // vectors must not shuffle ×subTables); candidates dedupe BEFORE
-          // scoring so each pair's cosine is computed once, with the
-          // vectors joined back from the cached assignment
-          val hotBands = acached.where(col("cluster").isInCollection(hotIds))
-            .select(col("id"), col("cluster"),
-              posexplode(graft.functions.gf.lshBuckets(col("vec"), planes, bits))
-                .as(Seq("table", "bucket")))
-          graft.ops.Dedup.verifiedPairs("semanticNearDups", hotBands,
-            Seq("cluster", "table", "bucket"), "id") { (cand, _) =>
-            clusterPairs(acached.where(!col("cluster").isInCollection(hotIds)))
-              .union(scored(cand, acached.select(col("id"), col("vec"))))
-              .where(col("sim") >= threshold)
-          }
+    // ==Hot-cluster sub-split== Candidate work is Σ cluster_size², so one
+    // popular template cluster IS the workload at corpus scale. The largest
+    // cluster goes through the `semanticNearDups.subsplit` gate; clusters
+    // above its threshold are salt-banded WITHIN the cluster by
+    // multi-table sign-bit LSH: near-duplicates still collide in some
+    // table with high probability (and identical vectors in EVERY table
+    // — the exactness the planted-twin oracle pins survives), while the
+    // (cluster, table, bucket) candidates of the shared pair kernel
+    // bound candidate work by occupancy². The bit width derives from the
+    // largest hot cluster (the size aggregation is k rows — an explicit,
+    // documented collect; `assigned` is persisted so centroid
+    // assignment runs once, released before return). Residual honesty: a
+    // hot cluster of NEAR-IDENTICAL vectors does not split (same sign on
+    // every plane) — but then the true pair OUTPUT is itself quadratic
+    // and no candidate scheme can beat its own output size; the
+    // sub-split bounds the case that matters, a broad cluster with
+    // sparse duplicates.
+    val acached = assigned.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      val sizes = graft.obs.JobLabel(spark, "semanticNearDups: cluster sizes")(
+        acached.groupBy("cluster").agg(count(lit(1)).as("cn"))
+          .collect().map(r => (r.getInt(0), r.getLong(1))))
+      val largest = sizes.map(_._2).maxOption.getOrElse(0L)
+      if (Gate.choose(spark, "semanticNearDups.subsplit", largest))
+        eager(clusterPairs(acached))
+      else {
+        val cap = math.max(1L, Gate.threshold("semanticNearDups.subsplit"))
+        val hotIds = sizes.collect { case (c, n) if n > cap => c }.toSeq
+        val bits = math.max(1, math.ceil(
+          math.log(largest.toDouble / cap) / math.log(2.0)).toInt)
+        val planes = hyperplanes(centroids.head.length, bits * subTables, seed)
+        // ids ONLY through the bucket exchange (the lshTables discipline:
+        // vectors must not shuffle ×subTables); candidates dedupe BEFORE
+        // scoring so each pair's cosine is computed once, with the
+        // vectors joined back from the cached assignment
+        val hotBands = acached.where(col("cluster").isInCollection(hotIds))
+          .select(col("id"), col("cluster"),
+            posexplode(graft.functions.gf.lshBuckets(col("vec"), planes, bits))
+              .as(Seq("table", "bucket")))
+        graft.ops.Dedup.verifiedPairs("semanticNearDups", hotBands,
+          Seq("cluster", "table", "bucket"), "id") { (cand, _) =>
+          clusterPairs(acached.where(!col("cluster").isInCollection(hotIds)))
+            .union(scored(cand, acached.select(col("id"), col("vec"))))
+            .where(col("sim") >= threshold)
         }
-      } finally acached.unpersist()
-    }
+      }
+    } finally acached.unpersist()
   }
 
   /** Embedding-cosine near-duplicate pairs (sim >= threshold), via LSH

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.functions.Tokens
+import graft.obs.JobLabel
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -776,15 +777,16 @@ object TextStats {
     }(outEnc).toDF("tok", "lb")
     summaries.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val n = summaries.where(col("tok").isNull)
-        .agg(coalesce(sum("lb"), lit(0L))).collect()(0).getLong(0)
+      val n = JobLabel(spark, "heavyHittersExact: stream length")(summaries
+        .where(col("tok").isNull).agg(coalesce(sum("lb"), lit(0L))).collect())(0).getLong(0)
       val cands = summaries.where(col("tok").isNotNull).select("tok").distinct()
-      val topRows = tokens.select(col(tokenCol).cast("string").as("tok"))
-        .join(broadcast(cands), "tok")
-        .groupBy("tok").agg(count(lit(1)).as("cnt"))
-        .orderBy(desc("cnt"), asc("tok"))
-        .limit(k)
-        .collect()
+      val topRows = JobLabel(spark, "heavyHittersExact: candidate counts")(
+        tokens.select(col(tokenCol).cast("string").as("tok"))
+          .join(broadcast(cands), "tok")
+          .groupBy("tok").agg(count(lit(1)).as("cnt"))
+          .orderBy(desc("cnt"), asc("tok"))
+          .limit(k)
+          .collect())
       val floor = n / (counters + 1L)
       // fewer than k candidates is only provably complete when floor == 0
       // (N <= counters: no partition could ever have pruned, so candidates

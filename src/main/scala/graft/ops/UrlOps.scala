@@ -198,8 +198,8 @@ object UrlOps {
     * the id tie-break makes the order total, so v collisions are
     * harmless). No window anywhere: the per-domain threshold is the
     * `min(cap, n)`-th smallest (v, id) pair from [[graft.metrics.Rank.select]]
-    * — one in-buffer aggregation for domains of at most `smallGroupMax`
-    * docs, counting bisection for larger ones (a billion-page domain never
+    * — one in-buffer aggregation for domains under its size gate,
+    * counting bisection for larger ones (a billion-page domain never
     * sorts in one task) — broadcast-joined back as `keep = (v, id) <=
     * threshold`. Driver state is one row per domain under the `maxDomains`
     * bounded-collect guard.
@@ -209,8 +209,7 @@ object UrlOps {
     * `n_domain`, `keep`.
     */
   def domainCapExact(docs: DataFrame, domainCol: String, idCol: String = "doc_id",
-      cap: Int = 1000, maxDomains: Int = 100000,
-      smallGroupMax: Long = 1L << 20): DataFrame = {
+      cap: Int = 1000, maxDomains: Int = 100000): DataFrame = {
     require(cap > 0, s"domainCapExact: cap must be positive, got $cap")
     // v confined to 32 bits: halves the bisection pass count on the
     // large-domain path
@@ -219,7 +218,7 @@ object UrlOps {
       .withColumn("cap_v", mulHashSlot(col(idCol), lit(1L << 32)))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val thr = graft.metrics.Rank.select(keyed, "cap_g", Seq(col("cap_v"), col(idCol)),
-        n => Seq(math.min(cap.toLong, n)), maxDomains, smallGroupMax)
+        n => Seq(math.min(cap.toLong, n)), maxDomains)
       .select(col("cap_g"), col("n").as("n_domain"),
         element_at(col("ranks"), 1).as("cap_thr"))
     keyed.join(broadcast(thr), Seq("cap_g"))

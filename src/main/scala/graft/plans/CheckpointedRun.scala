@@ -51,8 +51,7 @@ object CheckpointedRun {
       inputFingerprint: String,
       ruleFingerprint: String,
       nBuckets: Int = 64,
-      groupSize: Int = 16,
-      persistInput: Boolean = false
+      groupSize: Int = 16
   ): RunStatus = {
     require(groupSize > 0)
     val id = runId(inputFingerprint, ruleFingerprint, nBuckets)
@@ -70,20 +69,13 @@ object CheckpointedRun {
     val pending = (0 until nBuckets).filterNot(done)
     if (pending.isEmpty) return RunStatus(id, nBuckets, 0, nBuckets)
 
-    // persistInput=false (default): each group's job filters on the bucket
-    // hash BEFORE the expensive per-row work (Catalyst pushes the filter
-    // under the projection), so a data-dependent failure in one bucket
-    // aborts only its own group and the earlier groups' lineage survives —
-    // the class's incremental-progress guarantee. persistInput=true
-    // trades that for computing an expensive UPSTREAM (e.g. a shuffle the
-    // filter cannot push through) exactly once: the first group's job then
-    // materializes every pending bucket, so a poison row anywhere kills
-    // the run before any lineage commits.
-    val raw = df.withColumn("bucket", pmod(hash(col("conv_id")), lit(nBuckets)))
+    // each group's job filters on the bucket hash BEFORE the expensive
+    // per-row work (Catalyst pushes the filter under the projection), so a
+    // data-dependent failure in one bucket aborts only its own group and
+    // the earlier groups' lineage survives — the class's incremental-
+    // progress guarantee
+    val bucketed = df.withColumn("bucket", pmod(hash(col("conv_id")), lit(nBuckets)))
       .where(col("bucket").isin(pending: _*))
-    val bucketed =
-      if (persistInput) raw.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else raw
 
     val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
@@ -122,7 +114,6 @@ object CheckpointedRun {
           .coalesce(1).write.mode(SaveMode.Append).parquet(lineagePath)
       }
     } finally {
-      if (persistInput) bucketed.unpersist()
       prev match {
         case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
         case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")

@@ -22,10 +22,10 @@ import org.apache.spark.sql.catalyst.rules.Rule
   *    classes (never plain string/regex expressions),
   *  - the input subtree is a narrow Project/Filter chain over a leaf (a
   *    shuffle/aggregate below would already have distributed the rows),
-  *  - estimated input size is under `spark.graft.distribute.maxInputBytes`
-  *    (default 1 GiB — a corpus whose *payload bytes* are large must NOT be
-  *    round-robin-shuffled; its scan already has enough splits, guide §8),
-  *  - the plan is not streaming and not already repartitioned.
+  *  - the plan is not streaming,
+  *  - the input's estimated size passes the `DistributeExpensiveProjections`
+  *    [[Gate]] (1 GiB — a corpus whose *payload bytes* are large must NOT be
+  *    round-robin-shuffled; its scan already has enough splits, guide §8).
   *
   * Partition count = `defaultParallelism` (parameterised by the session's
   * core count — never a hard-coded constant).
@@ -49,7 +49,8 @@ case class DistributeExpensiveProjections(session: SparkSession)
   }
 
   /** Narrow chain from the projection down to a leaf: nothing below has
-    * introduced an exchange, so the leaf's split count IS the parallelism.
+    * introduced an exchange (nor a repartition, so the rule fires once),
+    * and the leaf's split count IS the parallelism.
     */
   private def narrowChain(plan: LogicalPlan): Boolean = plan match {
     case _: LeafNode => true
@@ -58,15 +59,11 @@ case class DistributeExpensiveProjections(session: SparkSession)
     case _ => false
   }
 
-  private def maxInputBytes: Long =
-    session.conf.get("spark.graft.distribute.maxInputBytes", (1L << 30).toString).toLong
-
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
     case p @ Project(list, child)
-        if list.exists(isExpensive) && !p.isStreaming &&
-          narrowChain(child) &&
-          child.collectFirst { case r: Repartition => r }.isEmpty &&
-          child.stats.sizeInBytes <= BigInt(maxInputBytes) =>
+        if list.exists(isExpensive) && !p.isStreaming && narrowChain(child) &&
+          Gate.choose(session, "DistributeExpensiveProjections",
+            Gate.estimatedBytes(child)) =>
       Project(list,
         Repartition(session.sparkContext.defaultParallelism, shuffle = true, child))
   }

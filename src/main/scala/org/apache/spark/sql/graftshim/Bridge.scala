@@ -18,4 +18,11 @@ object Bridge {
     */
   def waitListeners(sc: org.apache.spark.SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()
+
+  /** Post an event to the listener bus (`private[spark]`): listeners and
+    * the event log receive it as they do Spark's own events.
+    */
+  def post(sc: org.apache.spark.SparkContext,
+      event: org.apache.spark.scheduler.SparkListenerEvent): Unit =
+    sc.listenerBus.post(event)
 }

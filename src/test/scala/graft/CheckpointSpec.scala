@@ -115,33 +115,6 @@ class CheckpointSpec extends AnyFunSuite {
       spark.read.parquet(s"$sfDir/orders.parquet").count() * 3)
   }
 
-  test("persistInput=true: documented all-or-nothing failure, clean resume from zero") {
-    val out = java.nio.file.Files.createTempDirectory("graft_ckpt_fail2").toString
-    val redacted = Deid.redact(TurnsGen.turns(spark, sfDir))
-    val poisoned = redacted.withColumn("text",
-      when(pmod(hash(col("conv_id")), lit(8)) === 7,
-        raise_error(lit("injected crash"))).otherwise(col("text")))
-    // persisted input: the first group's job materializes EVERY pending
-    // bucket, so the poison fires before any lineage commits — the
-    // documented trade for computing an expensive upstream exactly once
-    intercept[Exception] {
-      CheckpointedRun.run(spark, poisoned, out, "sf0.001", "rules-v1",
-        nBuckets = 8, groupSize = 2, persistInput = true)
-    }
-    val lineageDir = new java.io.File(s"$out/_lineage")
-    val doneAfterCrash =
-      if (!lineageDir.exists()) Set.empty[Int]
-      else spark.read.parquet(s"$out/_lineage")
-        .where(col("status") === "done").select("bucket")
-        .collect().map(_.getInt(0)).toSet
-    assert(doneAfterCrash.isEmpty, doneAfterCrash)
-    val resumed = CheckpointedRun.run(spark, redacted, out, "sf0.001", "rules-v1",
-      nBuckets = 8, groupSize = 2, persistInput = true)
-    assert(resumed.processed == 8 && resumed.skipped == 0, s"got $resumed")
-    assert(spark.read.parquet(s"$out/data").count() ==
-      spark.read.parquet(s"$sfDir/orders.parquet").count() * 3)
-  }
-
   test("empty buckets get lineage rows (no retry-forever) and empty groups don't crash") {
     val out = java.nio.file.Files.createTempDirectory("graft_ckpt_empty").toString
     // 2 conversations over 64 buckets with groups of 4: most groups write

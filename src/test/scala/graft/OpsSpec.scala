@@ -1,6 +1,7 @@
 package graft
 
 import graft.ops.{Dedup, Similarity, TextStats}
+import graft.plans.Gate
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -171,7 +172,7 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("connectedComponents small-graph driver path equals the distributed loop") {
-    // graphs under smallGraphMax union-find on the driver; the labeling
+    // graphs under the gate's threshold union-find on the driver; the labeling
     // must be IDENTICAL to the distributed large-star/small-star fixpoint —
     // chain, star, two components, isolated nodes, out-of-order edges
     val edges = Seq((5L, 6L), (2L, 1L), (3L, 2L), (9L, 8L), (4L, 3L))
@@ -180,7 +181,8 @@ class OpsSpec extends AnyFunSuite {
     def labelMap(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("component")).toMap
     val driver = labelMap(Dedup.connectedComponents(edges, nodes))
-    val dist = labelMap(Dedup.connectedComponents(edges, nodes, smallGraphMax = 0))
+    val dist = labelMap(Gate.overriding("connectedComponents" -> 0L)(
+      Dedup.connectedComponents(edges, nodes)))
     assert(driver == dist, s"driver=$driver dist=$dist")
     assert(driver == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 5L,
       6L -> 5L, 7L -> 7L, 8L -> 8L, 9L -> 8L, 10L -> 10L), driver)
@@ -531,7 +533,8 @@ class OpsSpec extends AnyFunSuite {
     owned("cosineNearDups")(Similarity.cosineNearDups(emb, threshold = 0.5, bits = 4, tables = 4))
     owned("semanticNearDups")(Similarity.semanticNearDups(emb, centroids, threshold = 0.5))
     owned("semanticNearDups (sub-split)")(
-      Similarity.semanticNearDups(emb, centroids, threshold = 0.5, maxClusterSize = 10))
+      Gate.overriding("semanticNearDups.subsplit" -> 10L)(
+        Similarity.semanticNearDups(emb, centroids, threshold = 0.5)))
     owned("duplicatedWindowSpans")(Dedup.duplicatedWindowSpans(docsIn, k = 8))
   }
 
@@ -701,8 +704,8 @@ class OpsSpec extends AnyFunSuite {
       Seq.tabulate(dim)(j => if (j == 0) 1.0 else 0.0),
       Seq.tabulate(dim)(j => if (j == 1) 1.0 else 0.0))
     val cap = 50
-    val got = Similarity.semanticNearDups(df, centroids, threshold = 0.9,
-      maxClusterSize = cap)
+    val got = Gate.overriding("semanticNearDups.subsplit" -> cap.toLong)(
+      Similarity.semanticNearDups(df, centroids, threshold = 0.9))
     val pairs = got.select($"a", $"b").as[(Long, Long)].collect().toSet
     got.unpersist() // eager-materialization contract
     val want = twins.map { case (tid, _) => ((tid - 1000) / 13 * 13L, tid) }.toSet

@@ -159,7 +159,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("decontamination broadcast-size guard: oversized reference hint falls back to shuffle join") {
-    // a reference whose window-count hint exceeds the broadcast cap must NOT
+    // a reference whose size estimate exceeds the broadcast gate must NOT
     // be planned as a broadcast build (driver-memory safety at huge
     // benchmark suites) — the semi-join keys on the digest instead. AQE can
     // still re-plan a small shuffle at runtime, so pin the STATIC plan.
@@ -167,13 +167,12 @@ class PlanSpec extends AnyFunSuite {
     try {
       val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       val ref = docs.where(col("doc_id") % 7 === 3)
-      val pBig = plan(graft.ops.Dedup.contaminatedSpans(
-        docs, ref, refRowsHint = 10_000_000L))
+      val pBig = plan(graft.plans.Gate.overriding("decontamination.broadcast" -> 0L)(
+        graft.ops.Dedup.contaminatedSpans(docs, ref)))
       assert(!pBig.contains("BroadcastHashJoin"), pBig)
       assert(pBig.contains("ShuffledHashJoin") && pBig.contains("LeftSemi"), pBig)
-      // under the cap the hint keeps the broadcast path
-      val pSmall = plan(graft.ops.Dedup.contaminatedSpans(
-        docs, ref, refRowsHint = 1000L))
+      // under the gate the reference keeps the broadcast path
+      val pSmall = plan(graft.ops.Dedup.contaminatedSpans(docs, ref))
       assert(pSmall.contains("BroadcastHashJoin") || pSmall.contains("BroadcastExchange"), pSmall)
     } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
   }

@@ -2,6 +2,7 @@ package graft
 
 import graft.metrics.Rank
 import graft.ops.Dedup
+import graft.plans.Gate
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -17,9 +18,10 @@ class RankSpec extends AnyFunSuite {
   /** ks probing the clamps and the middle: 0 -> 1, n + 5 -> n */
   private val ks = (n: Long) => Seq(0L, 1L, (n + 1) / 2, n / 3 + 1, n, n + 5)
 
-  private def select(df: DataFrame, smallGroupMax: Long) =
-    Rank.select(df, "g", Seq(col("a"), col("b")), ks, smallGroupMax = smallGroupMax)
-      .collect().map(r => r.getString(0) -> ((r.getLong(1),
+  private def select(df: DataFrame, threshold: Long) =
+    Gate.overriding("Rank.select" -> threshold)(
+      Rank.select(df, "g", Seq(col("a"), col("b")), ks).collect())
+      .map(r => r.getString(0) -> ((r.getLong(1),
         r.getSeq[Row](2).map(t => (t.getLong(0), t.getLong(1))).toSeq))).toMap
 
   private def bySort(rows: Seq[(String, Option[Long], Option[Long])]) =
@@ -71,17 +73,35 @@ class RankSpec extends AnyFunSuite {
     sc.setJobDescription("caller")
     try {
       val groups = Seq(("x", 3L, 1L), ("x", 3L, 2L), ("y", 5L, 9L)).toDF("g", "a", "b")
-      Rank.select(groups, "g", Seq(col("a"), col("b")), n => Seq(n), smallGroupMax = 0)
-        .collect()
+      Gate.overriding("Rank.select" -> 0L)(
+        Rank.select(groups, "g", Seq(col("a"), col("b")), n => Seq(n)).collect())
       // a range, not a local relation: collecting a local relation runs no job
       val edges = spark.range(1, 3).select($"id".as("a"), ($"id" + 1).as("b"))
       val nodes = (1L to 3L).toDF("doc_id")
       Dedup.connectedComponents(edges, nodes).collect()
-      Dedup.connectedComponents(edges, nodes, smallGraphMax = 0).collect()
+      Gate.overriding("connectedComponents" -> 0L)(
+        Dedup.connectedComponents(edges, nodes).collect())
+      // the collects and counts inside the training and corpus ops
+      val sfDir = "/root/testdata/sf0.001"
+      val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+      graft.ops.Ivf.train(emb, k = 4, iters = 1)
+      graft.ops.Ivf.train(emb, k = 4, iters = 0, sampleCap = 16, init = "maximin")
+      graft.ops.Pq.trainCodebooks(emb, iters = 1, sampleCap = 64)
+      graft.ops.BpeTrain.train(docs, nMerges = 2)
+      graft.ops.TextStats.heavyHittersExact(
+        docs.select(explode(split($"text", " ")).as("tok")), k = 1, counters = 4096)
+      Dedup.duplicatedWindowSpans(docs).unpersist()
+      Dedup.contaminatedSpansBloom(docs, docs.where($"doc_id" % 7 === 3)).unpersist()
       assert(sc.getLocalProperty("spark.job.description") == "caller")
       val want = Set("Rank.select: heads", "Rank.select: range",
         "Rank.select: bisect pass 1 (level 1)", "connectedComponents: union-find collect",
-        "connectedComponentsAlternating: round 0", "connectedComponentsAlternating: round 1")
+        "connectedComponentsAlternating: round 0", "connectedComponentsAlternating: round 1",
+        "Ivf.train: hash init", "Ivf.train: Lloyd round 1", "Ivf.train: maximin sample",
+        "Pq.trainCodebooks: sample", "BpeTrain.train: vocabulary guard",
+        "BpeTrain.train: word counts", "heavyHittersExact: stream length",
+        "heavyHittersExact: candidate counts", "duplicatedWindowSpans: result count",
+        "contaminatedSpansBloom: bloom filter", "contaminatedSpansBloom: result count")
       // the listener bus is asynchronous
       var waited = 0
       while (!want.forall(seen.contains) && waited < 100) { Thread.sleep(100); waited += 1 }

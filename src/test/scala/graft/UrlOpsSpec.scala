@@ -1,6 +1,7 @@
 package graft
 
 import graft.ops.UrlOps
+import graft.plans.Gate
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -146,7 +147,8 @@ class UrlOpsSpec extends AnyFunSuite {
     // every domain through the bisection (0), where ties.org's threshold
     // sits on a shared v and is settled by the id level
     for (gate <- Seq(1L << 20, 0L)) {
-      val out = UrlOps.domainCapExact(docs, "domain", cap = 10, smallGroupMax = gate).cache()
+      val out = Gate.overriding("Rank.select" -> gate)(
+        UrlOps.domainCapExact(docs, "domain", cap = 10)).cache()
       try {
         val kept = out.groupBy("domain").agg(
           sum(when(col("keep"), 1L).otherwise(0L)).as("k"),
@@ -170,7 +172,8 @@ class UrlOpsSpec extends AnyFunSuite {
         val expectKept = byOrder.take(10).toSet
         rows.foreach { case (id, keep) => assert(keep === expectKept.contains(id), s"id $id") }
         // determinism
-        val again = UrlOps.domainCapExact(docs, "domain", cap = 10, smallGroupMax = gate)
+        val again = Gate.overriding("Rank.select" -> gate)(
+          UrlOps.domainCapExact(docs, "domain", cap = 10))
         assert(out.select("doc_id", "keep").except(
           again.select("doc_id", "keep")).count() === 0)
       } finally out.unpersist()
@@ -215,12 +218,13 @@ class UrlOpsSpec extends AnyFunSuite {
       (math.abs(rnd.nextLong()) % 100000000L, s"d${rnd.nextInt(5)}.com"))
       .distinct.toDF("doc_id", "domain")
     for (cap <- Seq(1, 7); gate <- Seq(1L << 20, 0L)) {
-      val bad = UrlOps.domainCapExact(docs, "domain", cap = cap, smallGroupMax = gate)
+      val bad = Gate.overriding("Rank.select" -> gate)(
+        UrlOps.domainCapExact(docs, "domain", cap = cap))
         .groupBy("domain").agg(
           sum(when(col("keep"), 1L).otherwise(0L)).as("k"),
           count(lit(1)).as("n"))
         .where(col("k") =!= least(lit(cap.toLong), col("n")))
-      assert(bad.count() === 0, s"cap=$cap smallGroupMax=$gate")
+      assert(bad.count() === 0, s"cap=$cap Rank.select threshold=$gate")
     }
   }
 
