@@ -2,12 +2,12 @@ package graft.functions
 
 import graft.detect.{AhoCorasick, Detectors, Resolver}
 import graft.extract.HtmlExtract
-import graft.model.{DeidEvent, Entity, SpanEnt}
-import graft.pipeline.DeidCore
+import graft.model.{Entity, SpanEnt}
+import graft.pipeline.{DeidBlock, DeidCore}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -88,40 +88,6 @@ object GraftSchemas {
   def spanEntRow(e: SpanEnt): InternalRow =
     new GenericInternalRow(Array[Any](e.start, e.end, utf8(e.typ), e.score, utf8(e.source)))
 
-  def entityRow(e: Entity): InternalRow =
-    new GenericInternalRow(Array[Any](utf8(e.typ), e.confidence, e.score,
-      utf8(e.source), utf8(e.language), e.start, e.end, UTF8String.fromString(e.text)))
-
-  def eventRow(e: DeidEvent): InternalRow =
-    new GenericInternalRow(Array[Any](utf8(e.entity_type), UTF8String.fromString(e.original),
-      UTF8String.fromString(e.replacement), e.start, e.end, utf8(e.source)))
-
-  /** `array<row(x)>` over `xs` in order. */
-  def rowArray[T](xs: List[T], row: T => InternalRow): GenericArrayData = {
-    val a = new Array[Any](xs.length)
-    var rest = xs
-    var i = 0
-    while (rest.nonEmpty) {
-      a(i) = row(rest.head)
-      rest = rest.tail
-      i += 1
-    }
-    new GenericArrayData(a)
-  }
-
-  /** A `map<string,string>` with `m`'s entries in its iteration order. */
-  def stringMap(m: Map[String, String]): ArrayBasedMapData = {
-    val keys = new Array[Any](m.size)
-    val values = new Array[Any](m.size)
-    var i = 0
-    m.foreach { case (k, v) =>
-      keys(i) = UTF8String.fromString(k)
-      values(i) = UTF8String.fromString(v)
-      i += 1
-    }
-    new ArrayBasedMapData(new GenericArrayData(keys), new GenericArrayData(values))
-  }
-
   /** Engine whitespace-tokenizer — compiled once per JVM, shared by the
     * tokenizing expressions (a per-row Pattern.compile in a hot eval path
     * is pure waste). Pinned to the EXPLICIT Java `\s` character class
@@ -179,8 +145,10 @@ case class DictDetectExpr(child: Expression)
 }
 
 /** The whole per-turn pipeline as one expression: (extract?) → detect →
-  * resolve → redact → normalize. Returns
-  * `struct<text, entities, events, replacement_map>`.
+  * resolve → redact → normalize, a [[graft.pipeline.DeidBlock]] of one
+  * turn. Returns `struct<text, entities, events, replacement_map>`. In a
+  * session with [[graft.plans.GraftExtensions]], a projection computing it
+  * runs as a [[graft.plans.DeidBlockExec]] over blocks of turns instead.
   */
 case class DeidTurnExpr(
     child: Expression,
@@ -194,17 +162,10 @@ case class DeidTurnExpr(
   override def prettyName: String = "graft_deid"
 
   override def nullSafeEval(input: Any): Any = {
-    val raw = input.asInstanceOf[UTF8String].toString
-    val text =
-      if (extractHtml && HtmlExtract.looksLikeHtml(raw)) HtmlExtract.getText(raw)
-      else raw
-    val r = DeidCore.process(text, mode, lang, withStub)
-    new GenericInternalRow(Array[Any](
-      UTF8String.fromString(r.text),
-      GraftSchemas.rowArray(r.entities, GraftSchemas.entityRow),
-      GraftSchemas.rowArray(r.events, GraftSchemas.eventRow),
-      GraftSchemas.stringMap(r.replacementMap)
-    ))
+    val b = DeidBlock.local
+    b.processBlock(Array(input.asInstanceOf[UTF8String].toString), 1, mode, lang, withStub,
+      extractHtml)
+    b.row(0)
   }
 
   override protected def withNewChildInternal(newChild: Expression): DeidTurnExpr =

@@ -24,7 +24,9 @@ object FakeProvider {
   private val PASSPORT_PREFIXES = IndexedSeq("P", "PA", "PB")
   private val GENDERS = IndexedSeq("1", "2")
 
-  /** `generate_deterministic` (`fake_provider.py:52-67,83-102`). */
+  /** `generate_deterministic` (`fake_provider.py:52-67,83-102`) on its
+    * `_fallback_generate` path (`fake_provider.py:104-168`).
+    */
   def generateDeterministic(
       entityType: String,
       original: String,
@@ -32,54 +34,82 @@ object FakeProvider {
       isTw: Boolean = true
   ): String = {
     val stableKey = s"$entityType:$original:$contextHash"
-    val seed = Digests.seedOf(stableKey)
-    fallbackGenerate(entityType, stableKey, seed, isTw)
+    if (drawn.contains(entityType)) {
+      draw(entityType, PyRandom.threadLocal(Digests.seedOf(stableKey)), isTw)
+    } else placeholder(entityType, Digests.sha256Hex(stableKey))
   }
 
-  /** [[generateDeterministic]] of `n` keys `(types(k), originals(k))`. The
-    * keys' MT19937 states are seeded two at a time
-    * ([[PyRandom.threadLocalPair]]), an odd last key alone; each value is
-    * drawn from its own key's state, so every value equals
-    * `generateDeterministic` of its key.
+  /** The entity types whose value is drawn from MT19937; any other type
+    * gets [[placeholder]].
     */
-  def generateAll(
-      types: Array[String],
-      originals: Array[String],
-      n: Int,
-      contextHash: String,
-      isTw: Boolean
-  ): Array[String] = {
-    val out = new Array[String](n)
-    var k = 0
-    while (k + 1 < n) {
-      val keyA = s"${types(k)}:${originals(k)}:$contextHash"
-      val keyB = s"${types(k + 1)}:${originals(k + 1)}:$contextHash"
-      val (a, b) = PyRandom.threadLocalPair(Digests.seedOf(keyA), Digests.seedOf(keyB))
-      out(k) = draw(types(k), keyA, a, isTw)
-      out(k + 1) = draw(types(k + 1), keyB, b, isTw)
-      k += 2
-    }
-    if (k < n) out(k) = generateDeterministic(types(k), originals(k), contextHash, isTw)
-    out
-  }
+  private val drawn: Set[String] = Set("ID", "TW_ID", "PHONE", "EMAIL", "UNIFIED_BUSINESS_NO",
+    "PASSPORT", "MEDICAL_ID", "CONTRACT_NO", "ORGANIZATION", "NAME", "ADDRESS")
 
-  /** `_fallback_generate` (`fake_provider.py:104-168`). */
-  def fallbackGenerate(
-      entityType: String,
-      stableKey: String,
-      seed: Long,
-      isTw: Boolean
-  ): String = draw(entityType, stableKey, PyRandom.threadLocal(seed), isTw)
+  /** Generates the values of blocks of keys. Every key whose type draws
+    * from MT19937 is seeded in one [[PyRandom.Block]] pass, then drawn from
+    * its own lane. Holds its own SHA-256 instance, so a caller can hash
+    * with [[sha]] too. Reusable; not thread-safe.
+    */
+  final class Batch {
+    val sha: java.security.MessageDigest = java.security.MessageDigest.getInstance("SHA-256")
+    // one lane wide until a block asks for more: a state row per word, so
+    // the one-turn path keeps its few lanes' rows compact in cache
+    private val rng = new PyRandom.Block(1)
+    private var seeds = new Array[Int](8)
+    private var laneOf = new Array[Int](8)
+    /** lanes seeded, and nanoseconds spent seeding them, by the last
+      * [[generate]]
+      */
+    var seeded = 0
+    var seedNs = 0L
+
+    /** `out(k)` = [[generateDeterministic]] of key `k < n`, whose type is
+      * `types(k)`, whose `type:original` is `names(k)` and whose context
+      * hash is `ctx(k)`.
+      */
+    def generate(
+        types: Array[String],
+        names: Array[String],
+        ctx: Array[String],
+        n: Int,
+        isTw: Boolean,
+        out: Array[String]
+    ): Unit = {
+      if (n > seeds.length) {
+        seeds = new Array[Int](math.max(n, 2 * seeds.length))
+        laneOf = new Array[Int](seeds.length)
+      }
+      var lanes = 0
+      var k = 0
+      while (k < n) {
+        val stableKey = names(k) + ":" + ctx(k)
+        if (drawn.contains(types(k))) {
+          seeds(lanes) = Digests.seedOf(sha, stableKey).toInt
+          laneOf(k) = lanes
+          lanes += 1
+        } else {
+          laneOf(k) = -1
+          out(k) = placeholder(types(k), Digests.sha256Hex(sha, stableKey))
+        }
+        k += 1
+      }
+      val t0 = System.nanoTime()
+      rng.seed(seeds, lanes)
+      seedNs = System.nanoTime() - t0
+      seeded = lanes
+      k = 0
+      while (k < n) {
+        if (laneOf(k) >= 0) out(k) = draw(types(k), rng.lane(laneOf(k)), isTw)
+        k += 1
+      }
+    }
+  }
 
   /** `_fallback_generate`'s draws from `rng`, already seeded with the key's
-    * seed. Call order of the RNG draws is load-bearing — do not reorder.
+    * seed, for an entity type in [[drawn]]. Call order of the RNG draws is
+    * load-bearing — do not reorder.
     */
-  private def draw(
-      entityType: String,
-      stableKey: String,
-      rng: PyRandom,
-      isTw: Boolean
-  ): String =
+  private def draw(entityType: String, rng: PyRandom, isTw: Boolean): String =
     entityType match {
       case "ID" | "TW_ID" =>
         if (isTw) {
@@ -117,13 +147,13 @@ object FakeProvider {
       case "ADDRESS" =>
         if (isTw) rng.choice(TW_ADDRESSES)
         else s"${rng.randint(1, 999)} Main Street"
-      case _ =>
-        placeholder(entityType, stableKey)
     }
 
-  /** `_placeholder` (`fake_provider.py:170-173`). */
-  def placeholder(entityType: String, stableKey: String): String =
-    s"<$entityType:${Digests.sha256Hex(stableKey).substring(0, 8)}>"
+  /** `_placeholder` (`fake_provider.py:170-173`), given the hex sha256 of
+    * the stable key.
+    */
+  private def placeholder(entityType: String, keySha256Hex: String): String =
+    s"<$entityType:${keySha256Hex.substring(0, 8)}>"
 
   /** Python `f"{v:0{width}d}"` for `0 <= v`. */
   private def zeroPad(v: Int, width: Int): String = {

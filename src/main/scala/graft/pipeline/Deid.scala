@@ -57,6 +57,19 @@ object Deid {
         floor(col("turn_idx").cast("long") / saltBucket))
       .sortWithinPartitions(col("conv_id"), col("turn_idx"))
 
+  /** The free-text parquet leaves of a redacted table. Their values rarely
+    * repeat within a row group, so dictionary encoding them costs write
+    * time and saves little space; the enumerated leaves (`conv_id`, `typ`,
+    * `source`, `language`, `entity_type`) keep their dictionaries.
+    */
+  val freeTextLeaves: Seq[String] = Seq(
+    "text",
+    "entities.list.element.text",
+    "events.list.element.original",
+    "events.list.element.replacement",
+    "replacement_map.key_value.key",
+    "replacement_map.key_value.value")
+
   /** End-to-end: read → redact → cluster → write, with per-run metrics.
     * Local/parquet layout; production swaps the writer for an Iceberg
     * catalog table (one-line change, see README).
@@ -68,7 +81,9 @@ object Deid {
       mode: String = "replace"
   ): Unit = {
     val redacted = redact(turns, mode)
-    clusterForWrite(redacted).write.mode("overwrite").parquet(outPath)
+    val noDictionary = freeTextLeaves.map(leaf => s"parquet.enable.dictionary#$leaf" -> "false")
+    clusterForWrite(redacted).write.mode("overwrite").options(noDictionary.toMap)
+      .parquet(outPath)
   }
 
   /** Per-type entity histogram over a redacted table (G9,

@@ -1,8 +1,7 @@
 package graft.pipeline
 
-import graft.detect.{CpOffsets, Detectors, Resolver}
+import graft.detect.{Detectors, Resolver}
 import graft.model.{DeidEvent, Entity, SpanEnt}
-import graft.redact.Redactor
 
 /** The per-turn detect → resolve → replace → normalize dataflow — the Spark
   * engine's pure core, cloning `DeidPipeline.process`
@@ -34,33 +33,17 @@ object DeidCore {
   def detect(text: String, lang: String, withStub: Boolean): Array[SpanEnt] =
     Resolver.resolve(detectRaw(text, lang, withStub))
 
-  /** Full per-turn pipeline. `mode` accepts the reference's aliases. */
+  /** Full per-turn pipeline: a [[DeidBlock]] of one turn. `mode` accepts
+    * the reference's aliases.
+    */
   def process(
       text: String,
       mode: String = "replace",
       lang: String = "zh",
-      withStub: Boolean = false,
-      contextHash: Option[String] = None
+      withStub: Boolean = false
   ): Result = {
-    val resolved = detect(text, lang, withStub)
-    val (clean, rawEvents) = Redactor.normalizeMode(mode) match {
-      case "blackbox" => Redactor.blackboxMode(text, resolved)
-      case _          => Redactor.replaceMode(text, resolved, contextHash, isTw = true)
-    }
-    val (events, map) = Redactor.filterEvents(rawEvents)
-    val off = new CpOffsets(text)
-    val entities = resolved.iterator.map { e =>
-      Entity(
-        typ = e.typ,
-        confidence = e.score,
-        score = e.score,
-        source = e.source,
-        language = lang,
-        start = e.start,
-        end = e.end,
-        text = off.slice(e.start, e.end)
-      )
-    }.toList
-    Result(clean, entities, events, map)
+    val b = DeidBlock.local
+    b.processBlock(Array(text), 1, mode, lang, withStub, extractHtml = false)
+    b.result(0)
   }
 }

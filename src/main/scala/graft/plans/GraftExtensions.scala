@@ -32,6 +32,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // fan small scans out before per-row-expensive document projections
     // (PDF/Office synth-parse-redact chains) — see DistributeExpensiveProjections
     ext.injectOptimizerRule(DistributeExpensiveProjections)
+    // deid over blocks of turns, one MT19937 seeding pass per block
+    ext.injectPlannerStrategy(_ => DeidBlockStrategy)
 
     def inject(name: String, usage: String)(builder: Seq[Expression] => Expression): Unit = {
       val fb: FunctionRegistry.FunctionBuilder = (args: Seq[Expression]) => builder(args)

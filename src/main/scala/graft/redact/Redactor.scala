@@ -1,8 +1,8 @@
 package graft.redact
 
 import graft.detect.CpOffsets
-import graft.functions.{Digests, FakeProvider}
 import graft.model.{DeidEvent, SpanEnt}
+import graft.pipeline.DeidBlock
 
 /** Replacement / masking — exact clone of `Replacer`
   * (`/root/reference/src/deid_pipeline/pii/utils/replacer.py:16-102`).
@@ -29,7 +29,7 @@ object Redactor {
 
   /** `_replace_mode` (`replacer.py:41-81`). `contextHash` defaults to
     * sha256 of the text (`replacer.py:46-48`), computed only when there is
-    * an entity to replace.
+    * an entity to replace. A block of one turn ([[graft.pipeline.DeidBlock]]).
     */
   def replaceMode(
       text: String,
@@ -37,54 +37,9 @@ object Redactor {
       contextHash: Option[String] = None,
       isTw: Boolean = true
   ): (String, List[RawEvent]) = {
-    if (entities.isEmpty) return (text, Nil)
-    val ctx = contextHash.getOrElse(Digests.sha256Hex(text))
-    val sortedDesc = entities.sortBy(e => -e.start) // stable on equal starts
-    val off = new CpOffsets(text)
-    // Per-document memo keyed `type:original` — the reference's LRU cache
-    // semantics within one document (`replace/cache.py`, key includes the
-    // ctx hash, constant here): dense repeated PII generates once. The
-    // distinct keys are collected first so their MT19937 states can be
-    // seeded two at a time
-    val slots = new java.util.HashMap[String, Integer]()
-    val n = sortedDesc.length
-    val originals = new Array[String](n)
-    val slotOf = new Array[Int](n)
-    val types = new Array[String](n)
-    val distinct = new Array[String](n)
-    var d = 0
-    var i = 0
-    while (i < n) {
-      val ent = sortedDesc(i)
-      val original = off.slice(ent.start, ent.end)
-      originals(i) = original
-      val slot = slots.putIfAbsent(s"${ent.typ}:$original", d)
-      if (slot == null) {
-        types(d) = ent.typ
-        distinct(d) = original
-        slotOf(i) = d
-        d += 1
-      } else slotOf(i) = slot
-      i += 1
-    }
-    val values = FakeProvider.generateAll(types, distinct, d, ctx, isTw)
-    val replacements = slotOf.map(values(_))
-    val result = spliceAll(text, off, sortedDesc.map(e => (e.start, e.end)), replacements)
-    val events = List.newBuilder[RawEvent]
-    i = 0
-    while (i < n) {
-      val ent = sortedDesc(i)
-      events += RawEvent(
-        ent.typ,
-        Some(originals(i)),
-        Some(replacements(i)),
-        ent.start,
-        ent.start + replacements(i).codePointCount(0, replacements(i).length),
-        ent.source
-      )
-      i += 1
-    }
-    (result, events.result())
+    val b = DeidBlock.local
+    b.replaceOne(text, entities, isTw, contextHash.orNull)
+    (b.redactedText(0), b.rawEvents(0))
   }
 
   /** `_blackbox_mode` (`replacer.py:83-102`) — length-preserving masking. */
@@ -92,76 +47,69 @@ object Redactor {
       text: String,
       entities: Array[SpanEnt]
   ): (String, List[RawEvent]) = {
-    val sortedDesc = entities.sortBy(e => -e.start)
-    val off = new CpOffsets(text)
-    val replacements = sortedDesc.map(e => "█" * (e.end - e.start))
-    val result = spliceAll(text, off, sortedDesc.map(e => (e.start, e.end)), replacements)
-    val events = List.newBuilder[RawEvent]
-    var i = 0
-    while (i < sortedDesc.length) {
-      val ent = sortedDesc(i)
-      events += RawEvent(ent.typ, None, None, ent.start,
-        ent.start + replacements(i).length, ent.source)
-      i += 1
-    }
-    (result, events.result())
+    val b = DeidBlock.local
+    b.blackboxOne(text, entities)
+    (b.redactedText(0), b.rawEvents(0))
   }
 
-  /** Apply descending-sorted splices. Fast path: when spans are pairwise
+  /** Applies the `m` splices `from until from + m` of `starts` / `ends` /
+    * `replacements`, sorted by start descending, as Python's sequence of
+    * `text[:s] + r + text[e:]` does. Fast path: when spans are pairwise
     * non-overlapping (`end(k) <= start(k-1)` in descending order — the
     * common case after conflict resolution), one left-to-right pass builds
     * the result in O(n). Any residual overlap falls back to the exact
     * Python emulation (each splice re-applied to the evolving string).
     */
-  private def spliceAll(
+  def spliceAll(
       text: String,
       off: CpOffsets,
-      spansDesc: Array[(Int, Int)],
-      replacementsDesc: Array[String]
+      starts: Array[Int],
+      ends: Array[Int],
+      replacements: Array[String],
+      from: Int,
+      m: Int
   ): String = {
-    val n = spansDesc.length
-    if (n == 0) return text
-    var overlapping = false
-    var k = 1
-    while (k < n && !overlapping) {
-      if (spansDesc(k)._2 > spansDesc(k - 1)._1) overlapping = true
+    if (m == 0) return text
+    val last = from + m - 1
+    var k = from + 1
+    while (k <= last) {
+      if (ends(k) > starts(k - 1)) return spliceAllSlow(text, starts, ends, replacements, from, m)
       k += 1
     }
     val cpLen = off.cpLen
-    if (!overlapping) {
-      val sb = new java.lang.StringBuilder(text.length + 64)
-      var prevU16 = 0
-      var i = n - 1 // ascending order
-      while (i >= 0) {
-        val (s, e) = spansDesc(i)
-        val s2 = math.min(math.max(s, 0), cpLen)
-        val e2 = math.min(math.max(e, s2), cpLen)
-        val u16s = off.toU16(s2)
-        val u16e = off.toU16(e2)
-        if (u16s >= prevU16) {
-          sb.append(text, prevU16, u16s)
-          sb.append(replacementsDesc(i))
-          prevU16 = u16e
-        } else {
-          // equal starts (zero-width collisions): keep exact emulation
-          return spliceAllSlow(text, spansDesc, replacementsDesc)
-        }
-        i -= 1
+    val sb = new java.lang.StringBuilder(text.length + 64)
+    var prevU16 = 0
+    var i = last // ascending order
+    while (i >= from) {
+      val s2 = math.min(math.max(starts(i), 0), cpLen)
+      val e2 = math.min(math.max(ends(i), s2), cpLen)
+      val u16s = off.toU16(s2)
+      val u16e = off.toU16(e2)
+      if (u16s < prevU16) {
+        // equal starts (zero-width collisions): keep exact emulation
+        return spliceAllSlow(text, starts, ends, replacements, from, m)
       }
-      sb.append(text, prevU16, text.length)
-      sb.toString
-    } else spliceAllSlow(text, spansDesc, replacementsDesc)
+      sb.append(text, prevU16, u16s)
+      sb.append(replacements(i))
+      prevU16 = u16e
+      i -= 1
+    }
+    sb.append(text, prevU16, text.length)
+    sb.toString
   }
 
   private def spliceAllSlow(
       text: String,
-      spansDesc: Array[(Int, Int)],
-      replacementsDesc: Array[String]
+      starts: Array[Int],
+      ends: Array[Int],
+      replacements: Array[String],
+      from: Int,
+      m: Int
   ): String = {
     var cur = text
-    var i = 0
-    while (i < spansDesc.length) {
-      cur = splice(cur, spansDesc(i)._1, spansDesc(i)._2, replacementsDesc(i))
+    var i = from
+    while (i < from + m) {
+      cur = splice(cur, starts(i), ends(i), replacements(i))
       i += 1
     }
     cur

@@ -115,20 +115,22 @@ class PropertySpec extends AnyFunSuite {
     })
   }
 
-  test("generateAll (keys seeded in pairs) == generateDeterministic per key") {
+  test("Batch.generate (keys seeded in one block pass) == generateDeterministic per key") {
     val keyGen = for {
       typ <- Gen.oneOf("ID", "PHONE", "EMAIL", "ADDRESS", "PASSPORT", "UNIFIED_BUSINESS_NO",
         "MEDICAL_ID", "NAME", "CONTRACT_NO", "T")
       original <- Gen.alphaNumStr
     } yield (typ, original)
     val caseGen = for {
-      n <- Gen.choose(0, 7)
+      n <- Gen.choose(0, 40)
       keys <- Gen.listOfN(n, keyGen)
       isTw <- Gen.oneOf(true, false)
     } yield (keys, isTw)
     check(Prop.forAll(caseGen) { case (keys, isTw) =>
-      val got = FakeProvider.generateAll(keys.map(_._1).toArray, keys.map(_._2).toArray,
-        keys.length, "ctx", isTw)
+      val got = new Array[String](keys.length)
+      new FakeProvider.Batch().generate(keys.map(_._1).toArray,
+        keys.map { case (t, o) => s"$t:$o" }.toArray, Array.fill(keys.length)("ctx"),
+        keys.length, isTw, got)
       got.toSeq == keys.map { case (t, o) => FakeProvider.generateDeterministic(t, o, "ctx", isTw) }
     })
   }

@@ -55,11 +55,13 @@ class PyRandomSpec extends AnyFunSuite {
     assert(got == Seq.fill(30)(fresh.getrandbits(32)))
   }
 
-  test("threadLocalPair seeds both instances like two fresh instances") {
+  test("a block of two seeds both lanes like two fresh instances") {
     val rnd = new scala.util.Random(20261019L)
     val seeds = Seq(0L, 1L, 12345L, 0xffffffffL) ++ Seq.fill(6)(rnd.nextLong() & 0xffffffffL)
+    val block = new PyRandom.Block(2)
     for (a <- seeds; b <- seeds) {
-      val (ra, rb) = PyRandom.threadLocalPair(a, b)
+      block.seed(Array(a.toInt, b.toInt), 2)
+      val (ra, rb) = (block.lane(0), block.lane(1))
       assert(ra ne rb)
       // 1,300 draws each pass the first and second 624-word twists
       val drawsA = Seq.fill(1300)(ra.getrandbits(32))
@@ -69,12 +71,54 @@ class PyRandomSpec extends AnyFunSuite {
       assert(drawsA == Seq.fill(1300)(freshA.getrandbits(32)), s"seed pair ($a, $b), first")
       assert(drawsB == Seq.fill(1300)(freshB.getrandbits(32)), s"seed pair ($a, $b), second")
     }
-    // the pair's first instance is the thread's single instance; reseeding
-    // it alone leaves the second one's stream where it was
-    val (ra, rb) = PyRandom.threadLocalPair(7L, 8L)
-    assert(PyRandom.threadLocal(12345L) eq ra)
+    // reseeding one lane alone leaves the other lane's stream where it was
+    block.seed(Array(7, 8), 2)
+    block.lane(0).reseed(12345L)
     val fresh8 = new PyRandom(8L)
-    assert(Seq.fill(5)(rb.getrandbits(32)) == Seq.fill(5)(fresh8.getrandbits(32)))
+    assert(Seq.fill(5)(block.lane(1).getrandbits(32)) == Seq.fill(5)(fresh8.getrandbits(32)))
+    val fresh12345 = new PyRandom(12345L)
+    assert(Seq.fill(5)(block.lane(0).getrandbits(32)) ==
+      Seq.fill(5)(fresh12345.getrandbits(32)))
+  }
+
+  /** The first 1,300 outputs of every draw API of `r`, in one sequence:
+    * 32-bit words, then randbelow / randint / choice / random / *Long
+    * draws in turn, which together pass the first and second twists.
+    */
+  private def draws(r: PyRandom): Iterator[Any] = (0 until 1300).iterator.map { i =>
+    i % 9 match {
+      case 0 => r.getrandbits(32)
+      case 1 => r.getrandbits(1 + i % 32)
+      case 2 => r.randbelow(1 + i)
+      case 3 => r.randint(-5, 9 + i)
+      case 4 => r.choice("ABCDEFGHJKLMNPQRSTUVXYWZ")
+      case 5 => r.choice(IndexedSeq("P", "PA", "PB"))
+      case 6 => r.random()
+      case 7 => r.uniform(-1.0, 3.0)
+      case _ =>
+        (r.getrandbitsLong(33 + i % 31), r.randbelowLong(10000000000L),
+          r.randintLong(1000000000L, 10000000000L))
+    }
+  }
+
+  test("every lane of a block equals a fresh instance, for every block size") {
+    val rnd = new scala.util.Random(20261020L)
+    // one block, reused: sizes grow past its width and shrink back
+    val block = new PyRandom.Block(1)
+    for (n <- Seq(1, 2, 3, 63, 64, 65, 256, 257, 3, 2, 1)) {
+      val keys = Array.fill(n)(rnd.nextInt())
+      keys(0) = 0
+      if (n > 1) keys(n - 1) = 0xffffffff
+      block.seed(keys, n)
+      // the lanes' draws interleave, so a lane's draws cannot disturb another's
+      val got = Array.fill(n)(Vector.newBuilder[Any])
+      val its = (0 until n).map(j => draws(block.lane(j)))
+      while (its.head.hasNext) (0 until n).foreach(j => got(j) += its(j).next())
+      (0 until n).foreach { j =>
+        val want = draws(new PyRandom(keys(j) & 0xffffffffL)).toVector
+        assert(got(j).result() == want, s"block of $n, lane $j, seed ${keys(j) & 0xffffffffL}")
+      }
+    }
   }
 
   test("randint matches CPython") {

@@ -186,4 +186,24 @@ class SparkPipelineSpec extends AnyFunSuite {
       !plan.contains("Exchange RoundRobinPartitioning"),
       s"unexpected shuffle in:\n$plan")
   }
+
+  test("Deid.run writes the free-text leaves without dictionaries") {
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import scala.jdk.CollectionConverters._
+    val out = s"${java.nio.file.Files.createTempDirectory("graft_deid_run")}/out"
+    Deid.run(spark, TurnsGen.turns(spark, sfDir).limit(300), out)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val files = new java.io.File(out).listFiles().filter(_.getName.endsWith(".parquet"))
+    val dictionary = files.toSeq.flatMap { f =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(f.getPath), conf))
+      try reader.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala).map { c =>
+        c.getPath.toDotString -> c.getEncodings.asScala.exists(_.usesDictionary)
+      } finally reader.close()
+    }.groupBy(_._1).view.mapValues(_.exists(_._2)).toMap
+    Deid.freeTextLeaves.foreach(leaf => assert(dictionary.get(leaf).contains(false), leaf))
+    Seq("conv_id", "entities.list.element.typ", "events.list.element.entity_type")
+      .foreach(leaf => assert(dictionary.get(leaf).contains(true), leaf))
+  }
 }

@@ -16,6 +16,10 @@ class StreamingSpec extends AnyFunSuite {
     val streamed = DeidStream.redact(DeidStream.readTurns(spark, s"$dir/in"))
     val q = DeidStream.writer(streamed, s"$dir/out", s"$dir/ckpt").start()
     q.awaitTermination(120000)
+    // the micro-batches run the block operator of GraftExtensions
+    val plan = q.asInstanceOf[org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
+      .streamingQuery.lastExecution.executedPlan
+    assert(plan.collectFirst { case d: graft.plans.DeidBlockExec => d }.nonEmpty, s"$plan")
 
     val got = spark.read.parquet(s"$dir/out")
     val want = Deid.redact(spark.read.parquet(s"$dir/in"))
